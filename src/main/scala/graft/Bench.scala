@@ -38,10 +38,8 @@ object Bench {
   /** One full pipeline run over parquet-staged input (resilient to
     * executor loss, unlike localCheckpoint blocks); returns (turns, sec).
     */
-  private def pipelineRun(spark: SparkSession, nBase: Long): (Long, Double) = {
-    val (turns, sec, _) = BenchPipeline.timedRun(spark, BenchPipeline.stageInput(spark, nBase))
-    (turns, sec)
-  }
+  private def pipelineRun(spark: SparkSession, nBase: Long): (Long, Double) =
+    BenchPipeline.timedRun(spark, BenchPipeline.stageInput(spark, nBase))
 
   /** Zip the compiled classes into a jar so local-cluster executor JVMs
     * (separate processes) can load graft classes via spark.jars.
@@ -109,7 +107,7 @@ object Bench {
       // bursts last whole reps (same config measured 45-169 s in round
       // 3), so the rep spread is what lets a reader judge whether the
       // min landed in a clean window
-      val repLog = scala.collection.mutable.Map.empty[Int, Vector[(Double, Map[String, Double])]]
+      val repLog = scala.collection.mutable.Map.empty[Int, Vector[Double]]
       // 1-min loadavg sampled at each rep start (rep_loads_lo/_hi in the
       // JSON): interference bursts last whole reps, so annotating each
       // rep with the load it started under lets a reader tell a burst
@@ -165,13 +163,13 @@ object Bench {
           // executor JVMs repay JIT + shuffle-dir setup (measured 3-6×
           // converged time on the first pass) — burn it untimed so every
           // measured rep sees a settled environment
-          val (turns, _, _) = BenchPipeline.timedRun(s, input)
+          val (turns, _) = BenchPipeline.timedRun(s, input)
           val measured = (1 to reps).map { _ =>
             val l = loadAvg()
             (l, BenchPipeline.timedRun(s, input))
           }
           repLog(executors) = repLog.getOrElse(executors, Vector.empty) ++
-            measured.map { case (_, r) => (r._2, r._3) }
+            measured.map(_._2._2)
           repLoads(executors) = repLoads.getOrElse(executors, Vector.empty) ++
             measured.map(_._1)
           turns
@@ -226,16 +224,13 @@ object Bench {
       }
       require(repLog.contains(exLo) && repLog.contains(exHi) && turnsLo > 0,
         "no successful rep at one of the configs")
-      def stagesJson(st: Map[String, Double]): String =
-        st.toSeq.sortBy(_._1).map { case (k, v) => f""""$k":$v%.2f""" }
-          .mkString("{", ",", "}")
-      val (tLo, stLo) = repLog(exLo).minBy(_._1)
-      val (tHi, stHi) = repLog(exHi).minBy(_._1)
+      val tLo = repLog(exLo).min
+      val tHi = repLog(exHi).min
       val thrLo = turnsLo / tLo
       val thrHi = turnsLo / tHi
       val eff = (thrHi / thrLo) / (exHi.toDouble / exLo)
       def repsJson(ex: Int): String =
-        repLog.getOrElse(ex, Vector.empty).map(t => f"${t._1}%.2f").mkString("[", ",", "]")
+        repLog.getOrElse(ex, Vector.empty).map(t => f"$t%.2f").mkString("[", ",", "]")
       def loadsJson(ex: Int): String =
         repLoads.getOrElse(ex, Vector.empty).map(l => f"$l%.2f").mkString("[", ",", "]")
       f"""{"turns":$turnsLo,"executors_lo":$exLo,"executors_hi":$exHi,""" +
@@ -244,8 +239,7 @@ object Bench {
         f""""scaling_efficiency":$eff%.3f,"interleaved":true,""" +
         s""""reps_lo":${repsJson(exLo)},"reps_hi":${repsJson(exHi)},""" +
         s""""block_loads":${blockLoads.map(l => f"$l%.2f").mkString("[", ",", "]")},""" +
-        s""""rep_loads_lo":${loadsJson(exLo)},"rep_loads_hi":${loadsJson(exHi)},""" +
-        s""""stages_lo":${stagesJson(stLo)},"stages_hi":${stagesJson(stHi)}}"""
+        s""""rep_loads_lo":${loadsJson(exLo)},"rep_loads_hi":${loadsJson(exHi)}}"""
     } catch {
       case e: Throwable =>
         System.err.println(s"[bench] local-cluster scaling unavailable: $e")
@@ -292,9 +286,9 @@ object Bench {
       val s = session(cores)
       pipelineRun(s, math.min(scaleBase, 500L)) // warmup (JIT, codegen cache)
       val input = BenchPipeline.stageInput(s, scaleBase)
-      val (t, sec, _) = BenchPipeline.timedRun(s, input)
+      val r = BenchPipeline.timedRun(s, input)
       s.stop()
-      (t, sec)
+      r
     }
     val threadRuns = Seq(loCores, cpus, loCores, cpus).map(c => c -> measureOnce(c))
     val (turnsLo, tLo) = threadRuns.filter(_._1 == loCores).map(_._2).minBy(_._2)

@@ -39,14 +39,14 @@ object BenchPipeline {
   }
 
   /** One timed end-to-end run over staged input: scan → pipeline → noop.
-    * Returns (turns, sec, per-stage seconds of this run). The turn count
-    * is rep-invariant reporting, not pipeline work — counted once per
-    * input (cached) so the timed section is exactly the pipeline.
+    * Returns (turns, sec). The turn count is rep-invariant reporting, not
+    * pipeline work — counted once per input (cached) so the timed section
+    * is exactly the pipeline.
     */
   private val turnCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
   private[graft] def timedRun(spark: SparkSession,
-                              input: DataFrame): (Long, Double, Map[String, Double]) = {
+                              input: DataFrame): (Long, Double) = {
     val key = input.queryExecution.analyzed.semanticHash().toString
     val turns = turnCounts.computeIfAbsent(key, _ => input.count())
     // plan-shape A/B switch (see Pipeline.Config.prePartitionPairs)
@@ -55,10 +55,6 @@ object BenchPipeline {
     val t0 = System.nanoTime()
     Pipeline.run(input, cfg).clusters.write.mode("overwrite").format("noop").save()
     val sec = (System.nanoTime() - t0) / 1e9
-    val stages = {
-      import scala.jdk.CollectionConverters._
-      Pipeline.stageTimings.asScala.toMap
-    }
     // drop this run's stage blocks NOW: localCheckpoint RDDs are otherwise
     // only unpersisted when driver GC reaches them (ContextCleaner), so
     // back-to-back runs stack ~1 GB of dead blocks per run onto executor
@@ -66,7 +62,7 @@ object BenchPipeline {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     System.gc()
-    (turns, sec, stages)
+    (turns, sec)
   }
 
   def main(args: Array[String]): Unit = {
@@ -133,7 +129,7 @@ object BenchPipeline {
     // measured rep sees the same settled environment
     timedRun(spark, input)
     val runs = (1 to reps).map { i =>
-      val (turns, sec, _) = timedRun(spark, input)
+      val (turns, sec) = timedRun(spark, input)
       println(f"PIPELINE_RUN $i turns=$turns sec=$sec%.2f turns_per_sec=${turns / sec}%.1f")
       (turns, sec)
     }

@@ -17,11 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SimilarityKernels {
 
-  /** Jaro similarity in [0,1] over unicode *code points* — the same unit
-    * Catalyst's `Length` counts, so [[graft.plans.JaroWinklerLengthPrune]]'s
-    * injected length-ratio bound is semantics-preserving on
-    * supplementary-plane text (UTF-16 `charAt` iteration was not: a pair
-    * with jw ≥ τ could fail the bound and be wrongly filtered).
+  /** Jaro similarity in [0,1] over unicode *code points* — the unit
+    * Catalyst's `Length` and DuckDB count; UTF-16 `charAt` iteration would
+    * diverge from both on supplementary-plane text.
     */
   def jaro(s1: String, s2: String): Double = {
     val a = s1.codePoints().toArray

@@ -45,6 +45,11 @@ object ConnectedComponents {
     */
   private[pipeline] val MaxBroadcastNodes = 4000000
 
+  /** Round cap of the distributed path; large/small-star converges in
+    * O(log n) rounds, so hitting it means a broken input, not a big one.
+    */
+  private val MaxIter = 50
+
   /** edges(src, dst) undirected, self-loops ignored →
     * assignment(conv_id, cluster_id); only nodes appearing in edges are
     * returned (callers attach singletons with coalesce, or use
@@ -65,7 +70,6 @@ object ConnectedComponents {
           // two — the per-round driver latency is the serial floor of the
           // whole pipeline once the data stages scale out
           checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
-          maxIter: Int = 50,
           onRound: (Int, Long, Long) => Unit = (_, _, _) => (),
           localMaxEdges: Long = 0L,
           edgesDistinct: Boolean = false,
@@ -80,7 +84,7 @@ object ConnectedComponents {
       assignmentDf(e.sparkSession,
         streamingCollectUnion(e).resolved(keepRoots = true))
     } else distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, maxIter, onRound)
+      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, onRound)
   }
 
   /** CC + singleton attach in one operator: every id in
@@ -94,7 +98,6 @@ object ConnectedComponents {
     */
   def runWithUniverse(edges: DataFrame, universe: DataFrame,
                       checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
-                      maxIter: Int = 50,
                       onRound: (Int, Long, Long) => Unit = (_, _, _) => (),
                       localMaxEdges: Long = 0L,
                       edgesDistinct: Boolean = false,
@@ -108,11 +111,11 @@ object ConnectedComponents {
       // explicitly, joinAttach via coalesce), and a root's cluster id IS
       // itself — so the payload carries only non-root members (~the
       // duplicate docs), typically a third smaller than the full node map
-      val uf = subTimed("collect+uf")(streamingCollectUnion(e))
+      val uf = streamingCollectUnion(e)
       if (uf.nonRootCount <= maxBroadcastNodes) {
         // ship a compact byte blob (names + root ordinals straight from
-        // the union-find arrays) and decode it ONCE PER EXECUTOR JVM into
-        // the lookup map: JavaSerializer on a 10⁶-entry
+        // the union-find arrays) and decode it once per executor into the
+        // lookup map: JavaSerializer on a 10⁶-entry
         // HashMap[String,String] walks a per-object handle table on both
         // ends, and building the map on the driver just to serialize it
         // re-pays the whole hash insert pass — both costs sit on the
@@ -121,8 +124,7 @@ object ConnectedComponents {
         // would round-trip every row driver → executors → driver — and a
         // sorted-parallel-arrays binary-search variant were both measured
         // worse earlier: +2 s / 1.5 s vs 0.8 s on this sub-phase.)
-        val blob = subTimed("encode")(uf.encodeNonRoots())
-        val bc = subTimed("broadcast")(spark.sparkContext.broadcast(blob))
+        val bc = spark.sparkContext.broadcast(new AssignmentBlob(uf.encodeNonRoots()))
         val look = udf(new LookupFn(bc)).asNondeterministic()
         // deterministic in fact; the flag keeps the optimizer from
         // re-executing the lookup across plan branches
@@ -130,44 +132,30 @@ object ConnectedComponents {
           look(col("conv_id")).as("cluster_id"))
       } else joinAttach(universe, assignmentDf(spark, uf.resolved(keepRoots = false)))
     } else joinAttach(universe, distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, maxIter, onRound))
+      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, onRound))
+  }
+
+  /** The broadcast attach payload. Spark keeps one deserialized copy of
+    * a broadcast value per executor, so the transient map is decoded once
+    * per executor and freed with the broadcast — no cache of our own,
+    * which could not tell apart the equal broadcast ids of two
+    * SparkContexts in one JVM.
+    */
+  private final class AssignmentBlob(blob: Array[Byte]) extends Serializable {
+    @transient lazy val map: java.util.HashMap[String, String] =
+      UnionFind.decodeNonRoots(blob)
   }
 
   /** Broadcast-blob lookup closure: resolves the decoded map once per
-    * TASK (transient lazy), which amortizes the per-JVM decode cache's
-    * synchronized access down to one hit per task — the per-row path is a
-    * plain HashMap get.
+    * task (transient lazy), so the per-row path is a plain HashMap get.
     */
-  private final class LookupFn(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
+  private final class LookupFn(bc: org.apache.spark.broadcast.Broadcast[AssignmentBlob])
       extends (String => String) with Serializable {
-    @transient private lazy val m = decodedBlob(bc)
+    @transient private lazy val m = bc.value.map
     override def apply(s: String): String = {
       val v = m.get(s); if (v == null) s else v
     }
   }
-
-  /** Per-JVM cache of decoded assignment blobs, keyed by broadcast id and
-    * bounded to the 2 most recent (back-to-back pipeline runs in one
-    * session must not accrete 10⁶-entry maps per run).
-    */
-  private val blobCache =
-    new java.util.LinkedHashMap[Long, java.util.HashMap[String, String]](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, java.util.HashMap[String, String]]): Boolean =
-        size() > 2
-    }
-
-  private def decodedBlob(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Byte]]): java.util.HashMap[String, String] =
-    blobCache.synchronized {
-      val hit = blobCache.get(bc.id)
-      if (hit != null) hit
-      else {
-        val m = UnionFind.decodeNonRoots(bc.value)
-        blobCache.put(bc.id, m)
-        m
-      }
-    }
 
   /** Collect the canonical edge set and union-find it, OVERLAPPED: each
     * scan task ships its partition's (u, v) strings as one flat array,
@@ -175,7 +163,7 @@ object ConnectedComponents {
     * union-find while later tasks are still scanning/serializing. The
     * previous shape — full collect(), then union-find over the Row array
     * — paid the two phases back to back on the driver (round-5 protocol
-    * CCSUB: collect 1.08 s + unionfind 0.85 s of a 3.5 s clusters stage);
+    * collect 1.08 s + unionfind 0.85 s of a 3.5 s clusters stage);
     * the overlap bounds the pair by max(scan, union) instead of the sum,
     * and extracting plain strings executor-side also drops the driver's
     * single-threaded InternalRow→Row conversion that collect() does.
@@ -219,19 +207,6 @@ object ConnectedComponents {
     }
     if (err.get() != null) throw err.get()
     uf
-  }
-
-  /** Sub-phase timing for the driver finisher (same env switch as the
-    * pipeline's stage timer): the finisher is the pipeline's serial tail,
-    * and per-phase prints are what tells collect vs union-find vs
-    * broadcast apart when attacking it.
-    */
-  private def subTimed[A](name: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      println(f"CCSUB $name%-10s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
   }
 
   private def joinAttach(universe: DataFrame, assignment: DataFrame): DataFrame =
@@ -432,13 +407,12 @@ object ConnectedComponents {
   /** The distributed large/small-star rounds + star-forest readout. */
   private def distributedAssignment(e0: DataFrame,
                                     checkpoint: (DataFrame, Int) => DataFrame,
-                                    maxIter: Int,
                                     onRound: (Int, Long, Long) => Unit): DataFrame = {
     var e = e0
     var fingerprint = (-1L, -1L)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       e = checkpoint(smallStar(largeStar(e)), iter)
       // order-independent fingerprint; bit_xor can't overflow (edge set is distinct)
       val row = e.agg(count(lit(1)), coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
@@ -448,7 +422,7 @@ object ConnectedComponents {
       fingerprint = fp
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
+    require(converged, s"connected components did not converge in $MaxIter rounds")
 
     // final graph is a forest of stars: cluster = min over closed neighborhood
     val sym = e.select(col("u"), col("v"))

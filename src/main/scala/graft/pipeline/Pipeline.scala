@@ -59,12 +59,6 @@ object Pipeline {
   case class StageResult(clusters: DataFrame, droppedBlocks: DataFrame,
                          matchedEdges: DataFrame)
 
-  /** Per-stage wall-clock of the most recent non-checkpointed run on this
-    * driver (seconds; reset at run start) — consumed by the bench harness
-    * so BENCH artifacts carry the stage decomposition, not just the total.
-    */
-  val stageTimings = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-
   /** Run without checkpointing (tests / small inputs). */
   def run(transcripts: DataFrame, cfg: Config = Config()): StageResult =
     runStages(transcripts, cfg, None)
@@ -151,19 +145,12 @@ object Pipeline {
       // a LogicalRDD leaf instead of the full upstream expression lineage
       // (driver-side re-optimization of huge trees is pure serial cost).
       case None =>
-        val t0 = System.nanoTime()
         // serialized cache: deserialized row objects across 4 cached stages
         // put allocation/GC pressure on the shared heap, which is what stops
         // thread-level scaling in a single JVM
-        val out = build.localCheckpoint(true,
+        build.localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        val sec = (System.nanoTime() - t0) / 1e9
-        stageTimings.put(name, sec)
-        if (sys.env.contains("GRAFT_STAGE_TIMING"))
-          println(f"STAGE $name%-14s $sec%.2f s")
-        out
     }
-    stageTimings.clear()
 
     // narrow payload through the pipeline: tokens + a bounded prefix only
     // (the full turns array / doc_text would be cached and shuffled at
@@ -243,8 +230,6 @@ object Pipeline {
       if (!o.future.isCompleted) None
       else o.get.get("n").map(v => Option(v).fold(0L)(_.asInstanceOf[Number].longValue))
     }
-    if (sys.env.contains("GRAFT_STAGE_TIMING"))
-      println(s"OBS matched_edges=${knownEdges.fold("undelivered")(_.toString)}")
     // edges is a filter+project over the already-materialized scored stage
     // — its own eager checkpoint was a pure extra pass; CC's first
     // distinct materializes it in the same job (TableIO keeps the snapshot

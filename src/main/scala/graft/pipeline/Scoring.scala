@@ -38,7 +38,8 @@ object Scoring {
     * pair's true score is ≤ w_jac·jaccard + w_jw + w_lev < t by the
     * guard (with a 1e-9 slack dwarfing double rounding), so no pair
     * that could match is ever skipped and no skipped pair can appear
-    * above t. Callers that read per-pair jw/lev values (q13-style
+    * above t. No prune when `w.jaccard <= 0` (the guard is undefined).
+    * Callers that read per-pair jw/lev values (q13-style
     * scoring surfaces) must NOT set it — default off.
     *
     * `pairIdCol`: name of the docs column whose VALUES the pair ids refer
@@ -99,10 +100,12 @@ object Scoring {
       // conditional branches codegen lazily: pruned pairs never run the
       // string kernels (guide §1.2 step 1 — don't compute what the
       // threshold cut throws away)
+      // the guard divides by w.jaccard: with no positive Jaccard weight
+      // Jaccard cannot lift a pair over t, so nothing is skipped
       .withColumn("need_str", pruneBelowThreshold match {
-        case Some(t) =>
+        case Some(t) if w.jaccard > 0 =>
           col("jaccard") >= lit((t - w.jaroWinkler - w.levenshtein) / w.jaccard - 1e-9)
-        case None => lit(true)
+        case _ => lit(true)
       })
       .withColumn("jw", when(col("need_str"),
         jaro_winkler(col("pref_a"), col("pref_b"))).otherwise(0d))

@@ -12,13 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Internals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register a SQL function on a live session (FunctionRegistry is
-    * `private[sql]`; session-construction-time `injectFunction` doesn't
-    * need this bridge, post-hoc installation does).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
 }

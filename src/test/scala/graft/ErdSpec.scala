@@ -21,8 +21,8 @@ class ErdSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val gt: DataFrame = {
-    val q = Readers.readErdQueries(spark, "/root/reference/data/Trec_beta.query.txt")
-    val ann = Readers.readErdAnnotations(spark, "/root/reference/data/Trec_beta.annotation.txt")
+    val q = Readers.readErdQueries(spark, ReferenceData("data/Trec_beta.query.txt"))
+    val ann = Readers.readErdAnnotations(spark, ReferenceData("data/Trec_beta.annotation.txt"))
     // Y-ERD-shaped frame: all queries enter (unannotated ones carry null
     // mention and generate candidates but no positives)
     q.join(ann, Seq("qid"), "left")
@@ -33,7 +33,7 @@ class ErdSpec extends SparkSpec {
 
   test("ERD LTR end-to-end: 5-fold CV MAP, LTR+Greedy strict F1, set-detector variants in bands") {
     val instances = Ltr.yerdCvInstances(gt).localCheckpoint(true)
-    val qrels = TrecEval.readQrels(spark, "/root/reference/qrels/ERD_trec.qrels")
+    val qrels = TrecEval.readQrels(spark, ReferenceData("qrels/ERD_trec.qrels"))
 
     // --- CER: LTR (reference row MAP 0.8606) ---
     val cfg = Ltr.RfConfig(numTrees = 200, featuresPerSplit = 3, maxDepth = 12)
@@ -53,7 +53,7 @@ class ErdSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("erdgreedy").toString
     Readers.writeErdEval(members.toDF(), s"$dir/run")
     val strict = StrictEval.evaluate(spark,
-      "/root/reference/qrels/ERD_elq.qrels", s"$dir/run")
+      ReferenceData("qrels/ERD_elq.qrels"), s"$dir/run")
     info(f"ERD LTR+Greedy strict: P=${strict.precision}%.4f R=${strict.recall}%.4f " +
       f"F1=${strict.f1}%.4f (reference row 0.8398)")
     assert(strict.f1 >= 0.8398 - 0.07, f"strict F1 ${strict.f1}%.4f below band")
@@ -77,7 +77,7 @@ class ErdSpec extends SparkSpec {
       val outDir = java.nio.file.Files.createTempDirectory(s"erdisf").toString
       Readers.writeErdEval(IsfSets.keptMembers(mem, classified), s"$outDir/run")
       val s = StrictEval.evaluate(spark,
-        "/root/reference/qrels/ERD_elq.qrels", s"$outDir/run")
+        ReferenceData("qrels/ERD_elq.qrels"), s"$outDir/run")
       info(f"ERD $tag strict: P=${s.precision}%.4f R=${s.recall}%.4f F1=${s.f1}%.4f " +
         f"(reference row $refF1%.4f)")
       s.f1

@@ -8,13 +8,11 @@ import graft.eval.{StrictEval, TrecEval}
   */
 class EvalSpec extends SparkSpec {
 
-  private val ref = "/root/reference"
-
   private def r4(x: Double) = math.rint(x * 10000) / 10000
 
   test("strict macro eval reproduces ERD MLMcg+Greedy = 0.7143/0.7125/0.7134 (BASELINE.md)") {
     val r = StrictEval.evaluate(spark,
-      s"$ref/qrels/ERD_elq.qrels", s"$ref/runs/dis/erd-mlmcg-greedy.run")
+      ReferenceData("qrels/ERD_elq.qrels"), ReferenceData("runs/dis/erd-mlmcg-greedy.run"))
     assert(r4(r.precision) == 0.7143, r)
     assert(r4(r.recall) == 0.7125, r)
     assert(r4(r.f1) == 0.7134, r)
@@ -22,7 +20,7 @@ class EvalSpec extends SparkSpec {
 
   test("strict macro eval reproduces Y-ERD LTR+Greedy = 0.7865/0.7870/0.7867 (BASELINE.md)") {
     val r = StrictEval.evaluate(spark,
-      s"$ref/qrels/Y-ERD_elq.qrels", s"$ref/runs/dis/yerd-ltr-greedy.run")
+      ReferenceData("qrels/Y-ERD_elq.qrels"), ReferenceData("runs/dis/yerd-ltr-greedy.run"))
     assert(r4(r.precision) == 0.7865, r)
     assert(r4(r.recall) == 0.7870, r)
     assert(r4(r.f1) == 0.7867, r)
@@ -30,8 +28,8 @@ class EvalSpec extends SparkSpec {
 
   test("TREC eval reproduces erd-mlmcg MAP/P@5/MRR/recall = 0.8543/0.2356/0.8852/0.9333") {
     val r = TrecEval.evaluate(
-      TrecEval.readQrels(spark, s"$ref/qrels/ERD_trec.qrels"),
-      TrecEval.readRun(spark, s"$ref/runs/cer/erd-mlmcg.run"))
+      TrecEval.readQrels(spark, ReferenceData("qrels/ERD_trec.qrels")),
+      TrecEval.readRun(spark, ReferenceData("runs/cer/erd-mlmcg.run")))
     assert(r.nQueries == 45, r)
     assert(r4(r.map) == 0.8543, r)
     assert(r4(r.p5) == 0.2356, r)
@@ -41,8 +39,8 @@ class EvalSpec extends SparkSpec {
 
   test("TREC eval reproduces yerd-ltr MAP = 0.8667 over 1256 queries") {
     val r = TrecEval.evaluate(
-      TrecEval.readQrels(spark, s"$ref/qrels/Y-ERD_trec.qrels"),
-      TrecEval.readRun(spark, s"$ref/runs/cer/yerd-ltr.run"))
+      TrecEval.readQrels(spark, ReferenceData("qrels/Y-ERD_trec.qrels")),
+      TrecEval.readRun(spark, ReferenceData("runs/cer/yerd-ltr.run")))
     assert(r.nQueries == 1256, r)
     assert(r4(r.map) == 0.8667, r)
   }

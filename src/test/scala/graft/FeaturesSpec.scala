@@ -81,7 +81,7 @@ class FeaturesSpec extends SparkSpec {
   }
 
   test("gtToIsfInstances on the real Y-ERD gt reproduces the reference set grouping") {
-    val gt = Readers.readYerdTsv(spark, "/root/reference/data/Y-ERD.tsv")
+    val gt = Readers.readYerdTsv(spark, ReferenceData("data/Y-ERD.tsv"))
       .select(col("qid"), col("set_id"), col("freebase_id").as("entity"), col("mention"))
     val out = Features.gtToIsfInstances(gt).cache()
     // scalar oracle over the collected rows (the reference's dict loop)
@@ -190,7 +190,7 @@ class FeaturesSpec extends SparkSpec {
   }
 
   test("ERD annotation reader parses the 5-col reference fixture") {
-    val ann = Readers.readErdAnnotations(spark, "/root/reference/data/Trec_beta.annotation.txt")
+    val ann = Readers.readErdAnnotations(spark, ReferenceData("data/Trec_beta.annotation.txt"))
     assert(ann.columns.toSeq == Seq("qid", "set_id", "freebase_id", "mention", "label"))
     val first = ann.where($"qid" === "TREC-7").head()
     assert(first.getString(2) == "/m/04cnvy" && first.getString(3) == "bowflex")

@@ -67,7 +67,7 @@ class GreedyIsfSpec extends SparkSpec {
   }
 
   test("end-to-end CMNS back-off + greedy on Y-ERD, erdeval output, strict-evaluated") {
-    val gt = Readers.readYerdTsv(spark, "/root/reference/data/Y-ERD.tsv")
+    val gt = Readers.readYerdTsv(spark, ReferenceData("data/Y-ERD.tsv"))
     val queries = gt.select(col("qid"), col("query").as("qtext")).distinct()
     // surface-form dictionary from the gt annotations themselves
     // (the Mongo FACC dictionary is not shipped; the gt mentions make a
@@ -90,7 +90,7 @@ class GreedyIsfSpec extends SparkSpec {
     Readers.writeErdEval(members, s"$dir/run")
 
     // erdeval file(s) written as text part files — feed the directory
-    val r = StrictEval.evaluate(spark, "/root/reference/qrels/Y-ERD_elq.qrels", s"$dir/run")
+    val r = StrictEval.evaluate(spark, ReferenceData("qrels/Y-ERD_elq.qrels"), s"$dir/run")
     info(s"CMNS+greedy on Y-ERD (gt-derived dict): P=${r.precision} R=${r.recall} F1=${r.f1}")
     assert(r.nQueries > 1000)
     assert(r.f1 >= 0.5, s"F1 ${r.f1} unexpectedly low")

@@ -134,6 +134,18 @@ class PipelineSpec extends SparkSpec {
       survivorsPruned.exceptAll(survivorsPlain).isEmpty)
   }
 
+  test("zero Jaccard weight: identical conversations still link under the prune") {
+    // the prune guard divides by the Jaccard weight; at 0 it must not
+    // skip the string kernels that carry the whole score
+    val first = t.select(min("conv_id")).as[String].head()
+    val one = t.where(col("conv_id") === first)
+    val twins = one.unionByName(one.withColumn("conv_id", lit(s"$first-twin")))
+    val cfg = Pipeline.Config(weights = Scoring.Weights(0.0, 0.5, 0.5), scoreThreshold = 1.0)
+    val clusters = Pipeline.run(twins, cfg).clusters
+    assert(clusters.count() == 2)
+    assert(clusters.select("cluster_id").distinct().as[String].collect().toSeq == Seq(first))
+  }
+
   test("checkpointed run resumes from snapshots and is byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val io = new ParquetTableIO(spark, dir)
