@@ -135,9 +135,9 @@ object SparkEntry {
         .where(col("n_docs").between(2, 64))),
 
     // ---- blocking: candidate pairs with cap (graft pairs stage) ----
-    // 2-exchange plan (Blocking.pairsFromBlocks): count → broadcast-anti
-    // hot keys → collect-per-block → native pair explode. The round-1
-    // 4-exchange self-join shape was the measured scaling bottleneck.
+    // 2-exchange plan (Blocking.pairsFromBlocks): bounded collect per
+    // block → native pair explode → pair dedup. The round-1 4-exchange
+    // self-join shape was the measured scaling bottleneck.
     "q12_candidate_pairs" -> ((s, d) => {
       val blocks = t(s, d, "documents")
         .select(col("doc_id").as("conv_id"),
@@ -712,7 +712,7 @@ object SparkEntry {
           to_timestamp(lit("2026-01-01 00:00:00")).as("ts"), col("text"))
       val index = graft.streaming.IncrementalLink.corpusIndex(corpus)
       graft.streaming.IncrementalLink
-        .linkAgainstCorpus(stream, index, threshold = 0.3)
+        .linkAgainstCorpus(stream, index, Pipeline.Config(scoreThreshold = 0.3))
         .select(col("conv_id"), col("corpus_id"),
           round(col("jaccard"), 4).as("jaccard"),
           round(col("jw"), 4).as("jw"),

@@ -56,31 +56,22 @@ case class MinHashBandKeysExpr(child: Expression, shingleK: Int, numHashes: Int,
 case class PairCombosExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) | ArrayType(LongType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"pair_combos requires array<string> or array<bigint>, got $other")
+      s"pair_combos requires array<bigint>, got $other")
   }
 
-  private def elemType: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-
   override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("conv_a", elemType, nullable = false),
-      StructField("conv_b", elemType, nullable = false))), containsNull = false)
+    StructType(Seq(StructField("conv_a", LongType, nullable = false),
+      StructField("conv_b", LongType, nullable = false))), containsNull = false)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "pair_combos"
 
-  private def isLong = elemType == LongType
-
   override protected def nullSafeEval(input: Any): Any =
-    if (isLong) HashingKernels.pairCombosLong(input.asInstanceOf[ArrayData])
-    else HashingKernels.pairCombos(input.asInstanceOf[ArrayData])
+    HashingKernels.pairCombosLong(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (isLong) "pairCombosLong" else "pairCombos"
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashingKernels.$fn($c)")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashingKernels.pairCombosLong($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

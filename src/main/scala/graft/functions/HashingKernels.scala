@@ -260,40 +260,12 @@ object HashingKernels {
                                       seed: Long): ArrayData =
     winnowFromSeq(shingleHashSeqFromHashes(tokH, k, seed), w)
 
-  /** All unordered pairs (a < b) of a member array, sorted — the pair
+  /** All unordered pairs (a < b) of a long member array, sorted — the pair
     * enumeration inside a capped block. Output: array<struct<a,b>>.
     * Input arrays are bounded by the block cap, so n² stays tiny; the
     * tight loop avoids the interpreted nested-transform tree (measured
     * ~10× on 10^6 blocks).
     */
-  def pairCombos(members: ArrayData): ArrayData = {
-    val n = members.numElements()
-    val arr = new Array[org.apache.spark.unsafe.types.UTF8String](n)
-    var i = 0
-    while (i < n) { arr(i) = members.getUTF8String(i); i += 1 }
-    java.util.Arrays.sort(arr, new java.util.Comparator[org.apache.spark.unsafe.types.UTF8String] {
-      override def compare(x: org.apache.spark.unsafe.types.UTF8String,
-                           y: org.apache.spark.unsafe.types.UTF8String): Int = x.compareTo(y)
-    })
-    val out = new Array[Any](n * (n - 1) / 2)
-    var idx = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-        row.update(0, arr(i))
-        row.update(1, arr(j))
-        out(idx) = row
-        idx += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Long-id variant of [[pairCombos]]. */
   def pairCombosLong(members: ArrayData): ArrayData = {
     val arr = members.toLongArray()
     java.util.Arrays.sort(arr)

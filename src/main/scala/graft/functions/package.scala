@@ -218,7 +218,7 @@ package object functions {
     Internals.column(
       MinHashBandKeysExpr(Internals.expression(toks), shingleK, numHashes, bands))
 
-  /** All unordered (a < b) pairs of a member array — native codegen'd
+  /** All unordered (a < b) pairs of a long member array — native codegen'd
     * expression used by capped-block pair generation.
     */
   def pair_combos(members: Column): Column =

@@ -157,10 +157,6 @@ object Dedup {
       .select(col("conv_a").as("a"), col("conv_b").as("b"), col("hamming"))
   }
 
-  /** Embedding cosine near-dup pairs: random-hyperplane sign-bucket LSH
-    * (deterministic hash-derived hyperplanes, built-in exprs only), exact
-    * cosine verify inside buckets.
-    */
   /** Sign-bucket assignment (conv_id, block_key) — exposed for the
     * correctness gate's oracle export, like [[simhashSignatures]].
     */
@@ -169,19 +165,26 @@ object Dedup {
     emb.select(col(idCol).cast("string").as("conv_id"),
       signBucket(col(vecCol), signBits).as("block_key"))
 
+  /** Embedding cosine near-dup pairs: random-hyperplane sign-bucket LSH
+    * (deterministic hash-derived hyperplanes, built-in exprs only), exact
+    * cosine verify inside buckets. `idCol` is integral: buckets pair on it
+    * as a long, and each output pair (a, b) is the ids as strings with
+    * a < b in string order — the order of [[signBuckets]]' export.
+    */
   def embeddingCosinePairs(emb: DataFrame, idCol: String, vecCol: String,
                            signBits: Int, minCosine: Double, cap: Int): DataFrame = {
-    val bucketed = signBuckets(emb, idCol, vecCol, signBits)
-    val (pairs, _) = Blocking.pairsFromBlocks(bucketed, cap)
-    val v = emb.select(col(idCol).cast("string").as("conv_id"), col(vecCol).as("vec"))
+    val v = emb.select(col(idCol).cast("long").as("conv_id"), col(vecCol).as("vec"))
+    val (pairs, _) = Blocking.pairsFromBlocks(
+      v.select(col("conv_id"), signBucket(col("vec"), signBits).as("block_key")), cap)
     val n = emb.sparkSession.sessionState.conf.numShufflePartitions
+    val (a, b) = (col("conv_a").cast("string"), col("conv_b").cast("string"))
     pairs
       .join(v.select(col("conv_id").as("conv_a"), col("vec").as("vec_a")), "conv_a")
       .join(v.select(col("conv_id").as("conv_b"), col("vec").as("vec_b")), "conv_b")
       .repartition(n, col("conv_a"), col("conv_b")) // CPU-bound verify: keep it wide
       .withColumn("cosine", cosine_sim(col("vec_a"), col("vec_b")))
       .where(col("cosine") >= minCosine)
-      .select(col("conv_a").as("a"), col("conv_b").as("b"), col("cosine"))
+      .select(least(a, b).as("a"), greatest(a, b).as("b"), col("cosine"))
   }
 
   /** Sign-bit bucket key: bit j = sign of ⟨vec, h_j⟩ where hyperplane

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import graft.functions._
 
 /** Candidate-pair generation (blocking).
@@ -36,19 +37,11 @@ object Blocking {
     docs.select(col("conv_id"),
       explode(shingle_hashes(col("tokens"), k, ExactShingleSeed)).as("block_key"))
 
-  /** Winnowed exact-shingle blocking: fingerprints selected by robust
-    * winnowing (window `w`) instead of every distinct shingle — ~w× fewer
-    * (block_key, conv_id) rows into the pair-generation shuffle and ~w×
-    * less cross-block pair redundancy, with a guaranteed shared key for
-    * any shared token run of length ≥ w + k − 1. w = 1 ≡ every shingle.
-    */
-  def winnowedShingleBlocks(docs: DataFrame, k: Int, w: Int): DataFrame =
-    if (w <= 1) exactShingleBlocks(docs, k)
-    else docs.select(col("conv_id"),
-      explode(winnowed_shingle_hashes(col("tokens"), k, w, ExactShingleSeed))
-        .as("block_key"))
-
-  /** Hybrid blocking: union of LSH band keys and exact shingle keys.
+  /** Hybrid blocking — THE block-key recipe: the union of LSH band keys
+    * and exact shingle keys, shared by the batch docs payload
+    * ([[Pipeline.blocksPayload]]) and the streaming linker
+    * ([[graft.streaming.IncrementalLink]]), so a key derived on either
+    * side joins the other's blocks.
     * LSH gives sub-quadratic candidate generation on near-duplicates; the
     * exact-shingle side restores recall on heavily-noised pairs whose
     * shingle-Jaccard sits below the LSH S-curve knee (they still share
@@ -56,6 +49,11 @@ object Blocking {
     * shared run of ≥ w + k − 1 tokens at a fraction of the key rate). Hot
     * exact keys are bounded by the downstream block cap, so the union
     * stays sub-quadratic.
+    *
+    * `tokens`: positional 64-bit token hashes (`array<bigint>`, the docs
+    * payload's `tokh`) or token strings, which are hashed positionally
+    * first — both forms yield the same keys for the same token sequence.
+    * Output: `keep` followed by one `block_key` row per key.
     *
     * Plan shape: ONE projection per doc — the two kernel families are
     * `array_union`ed per row and exploded once. The first cut unioned two
@@ -69,16 +67,21 @@ object Blocking {
     * drops no key the two-branch plan would have kept).
     */
   def hybridBlocks(docs: DataFrame, exactK: Int, lshShingleK: Int,
-                   numHashes: Int, bands: Int, winnowW: Int = 1): DataFrame = {
+                   numHashes: Int, bands: Int, winnowW: Int,
+                   tokens: Column = col("tokens"),
+                   keep: Seq[Column] = Seq(col("conv_id"))): DataFrame = {
+    val tokh = docs.select(tokens).schema.head.dataType match {
+      case ArrayType(LongType, _) => tokens
+      case _ => shingle_hashes(tokens, 1, distinct = false)
+    }
     val exactKeys =
-      if (winnowW <= 1) shingle_hashes(col("tokens"), exactK, ExactShingleSeed)
-      else winnowed_shingle_hashes(col("tokens"), exactK, winnowW, ExactShingleSeed)
+      if (winnowW <= 1) shingle_hashes(tokh, exactK, ExactShingleSeed)
+      else winnowed_shingle_hashes(tokh, exactK, winnowW, ExactShingleSeed)
     docs
-      .where(size(col("tokens")) > 0)
-      .select(col("conv_id"),
-        explode(array_union(
-          minhash_band_keys(col("tokens"), lshShingleK, numHashes, bands),
-          exactKeys)).as("block_key"))
+      .where(size(tokens) > 0)
+      .select(keep :+ explode(array_union(
+        minhash_band_keys(tokh, lshShingleK, numHashes, bands),
+        exactKeys)).as("block_key"): _*)
   }
 
   /** MinHash-LSH blocking: docs(conv_id, tokens) → (block_key, conv_id).
@@ -91,12 +94,10 @@ object Blocking {
   def minhashLshBlocks(docs: DataFrame, shingleK: Int, numHashes: Int,
                        bands: Int): DataFrame = {
     require(numHashes % bands == 0, s"numHashes $numHashes % bands $bands != 0")
-    val r = numHashes / bands
     // native codegen'd kernel: one hash per shingle + long-remix per slot.
     // (The first cut composed transform/aggregate HOFs — interpreted,
     // boxed, and with the signature re-evaluated per band: 20×+ slower and
     // GC-bound. See HashingKernels.)
-    val _ = r
     docs
       .where(size(col("tokens")) > 0)
       .select(col("conv_id"),
@@ -105,6 +106,9 @@ object Blocking {
   }
 
   /** Pairs from blocks with an explicit oversize cap.
+    * Input: (block_key, conv_id: bigint) — string ids are rejected; hash
+    * them first (the pipeline's `hid = xxhash64(conv_id)`) or pair on an
+    * integral id and map back.
     * Returns (pairs(conv_a, conv_b, n_blocks), droppedBlocks metrics DF
     * (block_key, block_size) — every dropped block is reported).
     *
@@ -114,94 +118,65 @@ object Blocking {
     * keys, semi-join, self-join on block_key, dedup — costs 4-5 exchanges
     * over the full block table and was the scaling bottleneck.
     * conv_a < conv_b canonicalizes (members sorted before enumeration).
-    */
-  /** `shareAggregate`: lazily cache the fused path's bounded-collect
-    * aggregate so independent consumers of BOTH outputs (pairs + the drop
-    * audit) share one pass over the block table — wanted when both are
-    * materialized (TableIO's stage("pairs") + stage("dropped_blocks")),
-    * pure cache pressure when the audit is never read (the in-memory
-    * pipeline): the aggregate is the largest intermediate of the whole
-    * run, and pinning it steals executor storage from the scored-stage
-    * joins.
+    *
+    * A bounded distinct-collect keeps at most cap+1 members per key, so a
+    * block that reaches cap+1 is known oversize without ever buffering a
+    * 100-TB hot key's full membership — the state bound of a count-first
+    * protocol, minus a full pass over the block table and a broadcast
+    * barrier. Oversize blocks report block_size = cap+1 as a LOWER BOUND
+    * (the drop audit needs the key, not the exact hot-key cardinality).
+    *
+    * `shareAggregate`: lazily cache the bounded-collect aggregate so
+    * independent consumers of BOTH outputs (pairs + the drop audit) share
+    * one pass over the block table — wanted when both are materialized
+    * (TableIO's stage("pairs") + stage("dropped_blocks")), pure cache
+    * pressure when the audit is never read (the in-memory pipeline): the
+    * aggregate is the largest intermediate of the whole run, and pinning
+    * it steals executor storage from the scored-stage joins.
     */
   def pairsFromBlocks(blocks: DataFrame, maxBlockSize: Int,
                       shareAggregate: Boolean = false,
                       prePartition: Boolean = false): (DataFrame, DataFrame) = {
-    val longIds = blocks.schema("conv_id").dataType ==
-      org.apache.spark.sql.types.LongType
-    if (longIds) {
-      // ONE-pass path (long ids — the pipeline's hid keys): a bounded
-      // distinct-collect keeps at most cap+1 members per key, so a block
-      // that reaches cap+1 is known oversize without ever buffering a
-      // 100-TB hot key's full membership — the same state bound the old
-      // count-first protocol guaranteed, minus a full pass over the block
-      // table and a broadcast barrier. Oversize blocks report block_size
-      // = cap+1 as a LOWER BOUND (the drop audit needs the key, not the
-      // exact hot-key cardinality).
-      // null ids are dropped up front: BoundedCollectSet's primitive Long
-      // input encoder would coerce a null to 0 where the generic path's
-      // collect_set silently skips it — the filter makes both branches
-      // agree (pipeline hids from xxhash64 are never null, so this
-      // predicate is a free codegen'd guard, not a data pass).
-      val input = blocks.where(col("conv_id").isNotNull)
-      // `prePartition`: hash-partition the raw (block_key, conv_id) rows
-      // FIRST, so the bounded collect runs entirely post-shuffle and the
-      // exchange ships raw 16-byte rows with NO map-side partial
-      // aggregation. Why offer this: block keys are ~unique (round-5
-      // event logs: 47.5M exploded keys → 47.1M partial-agg output rows,
-      // <1% combined), so Spark's map-side ObjectHashAggregate builds a
-      // ~1.3M-entry hash map per map task that combines nothing — pure
-      // random-memory traffic, the dominant term of the pairs stage's
-      // 3× task-time inflation at 16 cores vs 4. Trade: a hot key's raw
-      // rows all cross the shuffle (map-side combine previously capped
-      // each map task's contribution at cap+1), so keep the DEFAULT path
-      // when hot-key byte amplification matters more than map-side
-      // memory traffic; aggregation STATE stays ≤ cap+1 either way
-      // (saturating reduce).
-      val grouped =
-        if (prePartition) {
-          val n = blocks.sparkSession.sessionState.conf.numShufflePartitions
-          input.repartition(n, col("block_key")).groupBy("block_key")
-        } else input.groupBy("block_key")
-      val agged0 = grouped
-        .agg(graft.functions.BoundedCollectSet
-          .bounded(maxBlockSize + 1, col("conv_id").cast("long")).as("members"))
-      // lazy + serialized: the pairs job both materializes and consumes it
-      // (no extra barrier), and the cached member arrays stay compact
-      val agged =
-        if (shareAggregate) agged0.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        else agged0
-      val kept = agged.where(size(col("members")).between(2, maxBlockSize))
-      val dropped = agged.where(size(col("members")) > maxBlockSize)
-        .select(col("block_key"),
-          size(col("members")).cast("long").as("block_size"))
-      val pairs = kept
-        .select(explode(pair_combos(col("members"))).as("p"))
-        .groupBy(col("p.conv_a").as("conv_a"), col("p.conv_b").as("conv_b"))
-        .agg(count(lit(1)).as("n_blocks"))
-      return (pairs, dropped)
-    }
-    // generic-id path (string ids — the standalone dedup operators and the
-    // oracle-checked q11/q12 demos): hot keys are identified from a light
-    // count aggregate (map-side partial agg → tiny shuffle of (key, long))
-    // and removed via a broadcast anti-join BEFORE collecting members —
-    // collect_set on an unbounded hot key would buffer millions of ids in
-    // one aggregation state at 100 TB
-    // lazy-checkpointed: the hot-key set is consumed twice (anti-join
-    // broadcast here, metrics materialization in the pipeline) and the
-    // count aggregate it derives from is a full pass over the block table —
-    // evaluating it once, not per consumer, is worth seconds per run
-    val dropped = blocks.groupBy("block_key")
-      .agg(count(lit(1)).as("block_size"))
-      .where(col("block_size") > maxBlockSize)
-      .localCheckpoint(false)
-    val filtered = blocks.join(
-      broadcast(dropped.select("block_key")), Seq("block_key"), "left_anti")
-    val kept = filtered.groupBy("block_key")
-      .agg(collect_set(col("conv_id")).as("members"))
-      .where(size(col("members")) >= 2)
-
+    val idType = blocks.schema("conv_id").dataType
+    require(idType == LongType,
+      s"pairsFromBlocks needs bigint conv_id, got ${idType.simpleString}")
+    // null ids are dropped up front: BoundedCollectSet's primitive Long
+    // input encoder would coerce a null to 0 (pipeline hids from xxhash64
+    // are never null, so this predicate is a free codegen'd guard, not a
+    // data pass)
+    val input = blocks.where(col("conv_id").isNotNull)
+    // `prePartition`: hash-partition the raw (block_key, conv_id) rows
+    // FIRST, so the bounded collect runs entirely post-shuffle and the
+    // exchange ships raw 16-byte rows with NO map-side partial
+    // aggregation. Why offer this: block keys are ~unique (round-5
+    // event logs: 47.5M exploded keys → 47.1M partial-agg output rows,
+    // <1% combined), so Spark's map-side ObjectHashAggregate builds a
+    // ~1.3M-entry hash map per map task that combines nothing — pure
+    // random-memory traffic, the dominant term of the pairs stage's
+    // 3× task-time inflation at 16 cores vs 4. Trade: a hot key's raw
+    // rows all cross the shuffle (map-side combine previously capped
+    // each map task's contribution at cap+1), so keep the DEFAULT path
+    // when hot-key byte amplification matters more than map-side
+    // memory traffic; aggregation STATE stays ≤ cap+1 either way
+    // (saturating reduce).
+    val grouped =
+      if (prePartition) {
+        val n = blocks.sparkSession.sessionState.conf.numShufflePartitions
+        input.repartition(n, col("block_key")).groupBy("block_key")
+      } else input.groupBy("block_key")
+    val agged0 = grouped
+      .agg(graft.functions.BoundedCollectSet
+        .bounded(maxBlockSize + 1, col("conv_id")).as("members"))
+    // lazy + serialized: the pairs job both materializes and consumes it
+    // (no extra barrier), and the cached member arrays stay compact
+    val agged =
+      if (shareAggregate) agged0.localCheckpoint(false,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      else agged0
+    val kept = agged.where(size(col("members")).between(2, maxBlockSize))
+    val dropped = agged.where(size(col("members")) > maxBlockSize)
+      .select(col("block_key"),
+        size(col("members")).cast("long").as("block_size"))
     val pairs = kept
       .select(explode(pair_combos(col("members"))).as("p"))
       .groupBy(col("p.conv_a").as("conv_a"), col("p.conv_b").as("conv_b"))

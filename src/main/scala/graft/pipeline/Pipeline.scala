@@ -22,6 +22,10 @@ object Pipeline {
   case object LshBlocking extends BlockingMode
   case object HybridBlocking extends BlockingMode
 
+  /** Linkage parameters of the batch pipeline, the incremental pipeline
+    * and the streaming linker ([[graft.streaming.IncrementalLink]]), so
+    * all three derive the same block keys and scores.
+    */
   case class Config(
       shingleK: Int = 3,
       blocking: BlockingMode = HybridBlocking,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -24,6 +24,15 @@ object Scoring {
 
   case class Weights(jaccard: Double = 0.6, jaroWinkler: Double = 0.25,
                      levenshtein: Double = 0.15)
+
+  /** The score mixture over a row's `jaccard`, `jw` and `lev_sim`
+    * columns — shared by [[scorePairs]] and the streaming linker
+    * ([[graft.streaming.IncrementalLink.linkAgainstCorpus]]), so batch and
+    * stream scores agree by construction.
+    */
+  def mixture(w: Weights): Column =
+    lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
+      lit(w.levenshtein) * col("lev_sim")
 
   /** pairs(conv_a, conv_b, ...) × docs(conv_id, tokens[, prefix]) →
     * scored(conv_a, conv_b, jaccard, jw, lev_sim, score)
@@ -111,9 +120,7 @@ object Scoring {
         jaro_winkler(col("pref_a"), col("pref_b"))).otherwise(0d))
       .withColumn("lev_sim", when(col("need_str"),
         levenshtein_sim(col("pref_a"), col("pref_b"), levMaxDist)).otherwise(0d))
-      .withColumn("score",
-        lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
-          lit(w.levenshtein) * col("lev_sim"))
+      .withColumn("score", mixture(w))
       .select(col("id_a").as("conv_a"), col("id_b").as("conv_b"),
         col("jaccard"), col("jw"), col("lev_sim"), col("score"))
   }

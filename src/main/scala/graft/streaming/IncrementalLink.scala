@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.pipeline.Blocking
+import graft.pipeline.{Blocking, Pipeline, Scoring}
 
 /** Streaming incremental record linkage: the batch pipeline's blocking
   * semantics (hybrid MinHash-LSH + winnowed exact shingles,
@@ -50,40 +50,34 @@ object IncrementalLink {
   case class BlockState(members: List[String], oversize: Boolean)
 
   /** Stateless block-key derivation — BATCH-IDENTICAL keys: the same
-    * kernels, the same pre-hashed-token (`tokh`) hash family, and the same
-    * [[graft.pipeline.Pipeline.Config]] defaults (exactK=3, lshShingleK=2,
-    * numHashes=96, bands=24, winnowW=8) as
-    * [[graft.pipeline.Pipeline.blocksPayload]]. A key computed here JOINS
-    * a batch `blocks` snapshot for the same document text (the batch
-    * snapshot's member ids are `hid = xxhash64(conv_id)`, not the id
-    * string — map ids accordingly when mixing). Round 4 derived keys by
-    * chain-hashing token STRINGS with different parameter defaults, which
-    * could never join a batch snapshot (silent zero recall if mixed —
-    * ADVICE r4); `IncrementalLinkSpec` now pins key-set equality against
-    * `blocksPayload`.
+    * [[Blocking.hybridBlocks]] recipe, over the same pre-hashed tokens,
+    * with the same [[Pipeline.Config]] parameters as
+    * [[Pipeline.blocksPayload]]. A key computed here JOINS a batch
+    * `blocks` snapshot built under the same `cfg` for the same document
+    * text (the batch snapshot's member ids are `hid = xxhash64(conv_id)`,
+    * not the id string — map ids accordingly when mixing);
+    * `IncrementalLinkSpec` pins key-set equality against `blocksPayload`.
     * Input: streaming or batch DataFrame with (conv_id, ts) and either
     * `tokens: array<string>` or `text: string`.
     */
-  def blockKeys(docs: DataFrame, exactK: Int = 3, lshShingleK: Int = 2,
-                numHashes: Int = 96, bands: Int = 24,
-                winnowW: Int = 8): DataFrame = {
-    val toks =
-      if (docs.columns.contains("tokens")) col("tokens")
-      else graft.functions.tokens(col("text"))
-    // positional 64-bit token hashes first — the batch docs payload's
-    // `tokh` column (Pipeline.docsPayload), so the kernels below run the
-    // identical hashLong chains the batch blocks snapshot was built from
-    val tokh = graft.functions.shingle_hashes(toks, 1, distinct = false)
-    // array_union dedups (block_key, conv_id) repeats inline — the batch
-    // path gets the same dedup from its bounded-collect aggregate
-    val keys = array_union(
-      graft.functions.minhash_band_keys(tokh, lshShingleK, numHashes, bands),
-      graft.functions.winnowed_shingle_hashes(tokh, exactK, winnowW,
-        Blocking.ExactShingleSeed))
-    docs.where(size(toks) > 0)
-      .select(col("conv_id"), col("ts").cast("timestamp").as("ts"),
-        explode(keys).as("block_key"))
+  def blockKeys(docs: DataFrame, cfg: Pipeline.Config = Pipeline.Config()): DataFrame = {
+    requireHybrid(cfg)
+    Blocking.hybridBlocks(docs, cfg.shingleK, cfg.lshShingleK, cfg.numHashes,
+      cfg.bands, cfg.winnowWindow, tokens = toks(docs),
+      keep = Seq(col("conv_id"), col("ts").cast("timestamp").as("ts")))
   }
+
+  /** The streaming linker blocks with hybrid keys only; any other
+    * `cfg.blocking` would silently stop its keys from joining the batch
+    * snapshot's.
+    */
+  private def requireHybrid(cfg: Pipeline.Config): Unit =
+    require(cfg.blocking == Pipeline.HybridBlocking,
+      s"streaming linkage uses hybrid blocking, got ${cfg.blocking}")
+
+  private def toks(docs: DataFrame): Column =
+    if (docs.columns.contains("tokens")) col("tokens")
+    else graft.functions.tokens(col("text"))
 
   /** Stateful incremental pair emission. Each arriving member pairs with
     * every member already in its block's state (canonical a < b), then
@@ -205,35 +199,32 @@ object IncrementalLink {
 
   /** Per-doc linkage features: the scoring payload of
     * [[graft.pipeline.Scoring.scorePairs]] (distinct 64-bit token hashes +
-    * a bounded normalized prefix) plus one row per hybrid block key.
-    */
-  /** package-visible so [[graft.Verify]] can export the exact stream-side
-    * feature rows (tok_set, prefix, block_key) the q53 oracle replays
+    * a bounded normalized prefix) plus one row per hybrid block key
+    * ([[Blocking.hybridBlocks]], as in [[blockKeys]]).
+    * Package-visible so [[graft.Verify]] can export the exact stream-side
+    * feature rows (tok_set, prefix, block_key) the q53 oracle replays.
     */
   private[graft] def docFeatures(docs: DataFrame, exactK: Int, lshShingleK: Int,
                                  numHashes: Int, bands: Int, winnowW: Int,
                                  prefixChars: Int): DataFrame = {
-    val toks =
-      if (docs.columns.contains("tokens")) col("tokens")
-      else graft.functions.tokens(col("text"))
+    val t = toks(docs)
     val prefix =
       if (docs.columns.contains("text"))
         substring(graft.functions.norm_text(col("text")), 1, prefixChars)
       else substring(concat_ws(" ", col("tokens")), 1, prefixChars)
-    // same tokh-derived key family as blockKeys/blocksPayload (see
-    // blockKeys scaladoc); tok_set is the scoring verify set — identical
-    // values to Scoring.scorePairs' dedup'd tokh
-    val tokh = graft.functions.shingle_hashes(toks, 1, distinct = false)
-    val keys = array_union(
-      graft.functions.minhash_band_keys(tokh, lshShingleK, numHashes, bands),
-      graft.functions.winnowed_shingle_hashes(tokh, exactK, winnowW,
-        Blocking.ExactShingleSeed))
-    val base = docs.where(size(toks) > 0)
-      .withColumn("tok_set", graft.functions.shingle_hashes(toks, 1))
+    // tok_set is the scoring verify set — identical values to
+    // Scoring.scorePairs' dedup'd tokh
+    val base = docs
+      .withColumn("tok_set", graft.functions.shingle_hashes(t, 1))
       .withColumn("prefix", prefix)
-    base.select(
-      (base.columns.filterNot(Set("text", "tokens")).map(col) :+
-        explode(keys).as("block_key")).toIndexedSeq: _*)
+    Blocking.hybridBlocks(base, exactK, lshShingleK, numHashes, bands, winnowW,
+      tokens = t, keep = base.columns.filterNot(Set("text", "tokens")).map(col).toSeq)
+  }
+
+  private def docFeatures(docs: DataFrame, cfg: Pipeline.Config): DataFrame = {
+    requireHybrid(cfg)
+    docFeatures(docs, cfg.shingleK, cfg.lshShingleK, cfg.numHashes, cfg.bands,
+      cfg.winnowWindow, cfg.prefixChars)
   }
 
   /** Build the static side of the stream-static join from a corpus
@@ -245,13 +236,11 @@ object IncrementalLink {
     * Persist (or write bucketed by block_key) before serving: a streaming
     * query re-evaluates an unpersisted static plan every micro-batch.
     */
-  def corpusIndex(corpus: DataFrame, exactK: Int = 3, lshShingleK: Int = 2,
-                  numHashes: Int = 96, bands: Int = 24, winnowW: Int = 8,
-                  maxKeyFanout: Int = 64, prefixChars: Int = 256): DataFrame = {
+  def corpusIndex(corpus: DataFrame, cfg: Pipeline.Config = Pipeline.Config(),
+                  maxKeyFanout: Int = 64): DataFrame = {
     val feat = docFeatures(
       corpus.select(col("conv_id").as("corpus_id"),
-        col(if (corpus.columns.contains("text")) "text" else "tokens")),
-      exactK, lshShingleK, numHashes, bands, winnowW, prefixChars)
+        col(if (corpus.columns.contains("text")) "text" else "tokens")), cfg)
       .withColumnRenamed("tok_set", "corpus_tok_set")
       .withColumnRenamed("prefix", "corpus_prefix")
     val hot = feat.groupBy("block_key").agg(count(lit(1)).as("n"))
@@ -260,12 +249,12 @@ object IncrementalLink {
   }
 
   /** Link a stream of new docs (conv_id, ts, text|tokens) against a
-    * [[corpusIndex]]: stream-static join on block_key, watermarked
-    * candidate dedup (a pair sharing several keys is scored once per
-    * watermark window), then the batch scoring mixture inline
-    * (token-Jaccard + Jaro-Winkler + bounded-Levenshtein, identical
-    * kernels and weights to [[graft.pipeline.Scoring.scorePairs]]).
-    * Returns matches at `threshold` — append-mode, no retractions.
+    * [[corpusIndex]] built under the same `cfg`: stream-static join on
+    * block_key, watermarked candidate dedup (a pair sharing several keys
+    * is scored once per watermark window), then the batch kernels and
+    * [[Scoring.mixture]] inline (token-Jaccard + Jaro-Winkler +
+    * bounded-Levenshtein at `cfg.weights`). Returns matches at
+    * `cfg.scoreThreshold` — append-mode, no retractions.
     *
     * Also runs in BATCH mode (a non-streaming `stream` input): the
     * watermark node is eliminated by the analyzer and the candidate dedup
@@ -276,13 +265,8 @@ object IncrementalLink {
     * serving-path semantics.
     */
   def linkAgainstCorpus(stream: DataFrame, index: DataFrame,
-                        w: graft.pipeline.Scoring.Weights =
-                          graft.pipeline.Scoring.Weights(),
-                        threshold: Double = 0.55, levMaxDist: Int = 128,
-                        watermark: String = "1 hour", exactK: Int = 3,
-                        lshShingleK: Int = 2, numHashes: Int = 96,
-                        bands: Int = 24, winnowW: Int = 8,
-                        prefixChars: Int = 256): DataFrame = {
+                        cfg: Pipeline.Config = Pipeline.Config(),
+                        watermark: String = "1 hour"): DataFrame = {
     // Plan shape note (measured round 6): the block-key join broadcasts
     // the (micro-batch-sized) stream side, so the fat corpus index is
     // scanned, never shuffled; the only payload-carrying shuffle is the
@@ -291,8 +275,7 @@ object IncrementalLink {
     // was tried and measured WORSE (3.5 → 4.8 s on the q53 gate): the
     // per-doc payload projection of the index costs its own full-index
     // dedup shuffle, which the current shape never pays.
-    val candidates = docFeatures(stream, exactK, lshShingleK, numHashes,
-      bands, winnowW, prefixChars)
+    val candidates = docFeatures(stream, cfg)
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", watermark)
       .join(index, "block_key")
@@ -309,11 +292,9 @@ object IncrementalLink {
       .withColumn("jw",
         graft.functions.jaro_winkler(col("prefix"), col("corpus_prefix")))
       .withColumn("lev_sim", graft.functions.levenshtein_sim(
-        col("prefix"), col("corpus_prefix"), levMaxDist))
-      .withColumn("score",
-        lit(w.jaccard) * col("jaccard") + lit(w.jaroWinkler) * col("jw") +
-          lit(w.levenshtein) * col("lev_sim"))
-      .where(col("score") >= threshold)
+        col("prefix"), col("corpus_prefix"), cfg.levMaxDist))
+      .withColumn("score", Scoring.mixture(cfg.weights))
+      .where(col("score") >= cfg.scoreThreshold)
       .select(col("conv_id"), col("corpus_id"), col("ts"),
         col("jaccard"), col("jw"), col("lev_sim"), col("score"))
   }

@@ -166,7 +166,8 @@ class IncrementalLinkSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, String, Timestamp)]
     val stream = in.toDF().toDF("conv_id", "text", "ts")
-    val q = IncrementalLink.linkAgainstCorpus(stream, index, threshold = 0.55)
+    val q = IncrementalLink.linkAgainstCorpus(stream, index,
+      graft.pipeline.Pipeline.Config(scoreThreshold = 0.55))
       .writeStream.format("memory").queryName("ilcorp").outputMode("append").start()
     try {
       // two micro-batches; s1 appears in BOTH (watermarked dedup must

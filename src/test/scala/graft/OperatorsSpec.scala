@@ -124,6 +124,16 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("Dedup.embeddingCosinePairs orients each pair in string order") {
+    // ids 9 and 10 share a vector: numerically 9 < 10, but the operator's
+    // pairs (and q23's oracle) order ids as strings, where "10" < "9"
+    val emb = Seq((9L, Seq(0.3f, -0.2f, 0.9f)), (10L, Seq(0.3f, -0.2f, 0.9f)))
+      .toDF("vec_id", "embedding")
+    val out = Dedup.embeddingCosinePairs(emb, "vec_id", "embedding", 6, 0.25, 256)
+      .select("a", "b").as[(String, String)].collect().toSeq
+    assert(out == Seq(("10", "9")))
+  }
+
   test("SimilaritySearch.bruteForceTopK: self excluded, k respected, exact order") {
     val emb = Seq(
       (1L, Seq(1.0f, 0.0f, 0.0f)),

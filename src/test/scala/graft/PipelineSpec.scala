@@ -52,47 +52,47 @@ class PipelineSpec extends SparkSpec {
     assert(r.f1 >= 0.99, r.toString)
   }
 
+  // single-token shingle blocks over hid member ids (the pipeline's pair
+  // key): stopword tokens make plenty of blocks oversize at a small cap
+  private lazy val hidBlocks = Blocking.exactShingleBlocks(DocAssembly.assemble(t), 1)
+    .select(col("block_key"), xxhash64(col("conv_id")).as("conv_id"))
+
   test("hot blocks are capped and the drop is reported, not silent") {
     // tiny cap forces stopword-shingle blocks over the cap
-    val blocks = Blocking.exactShingleBlocks(DocAssembly.assemble(t), 1)
-    val (pairs, dropped) = Blocking.pairsFromBlocks(blocks, maxBlockSize = 10)
+    val (pairs, dropped) = Blocking.pairsFromBlocks(hidBlocks, maxBlockSize = 10)
     assert(dropped.count() > 0)
     val maxPairKey = pairs.groupBy().agg(max("n_blocks")).as[Long].head()
     assert(maxPairKey > 0)
   }
 
-  test("fused long-id pair path ≡ generic path (pairs equal, drops detected, state bounded)") {
-    // same block table under both id types: long ids take the one-pass
-    // bounded-collect plan, string ids the count+anti-join plan — pair
-    // sets must be identical and every dropped key must appear in both
-    val strBlocks = Blocking.exactShingleBlocks(DocAssembly.assemble(t), 1)
-    val longBlocks = strBlocks.select(col("block_key"),
-      xxhash64(col("conv_id")).as("conv_id"))
-    val (pGen, dGen) = Blocking.pairsFromBlocks(strBlocks, maxBlockSize = 10)
-    val (pFus, dFus) = Blocking.pairsFromBlocks(longBlocks, maxBlockSize = 10)
-    // compare pair sets through the same hashing
-    val gen = pGen.select(xxhash64(col("conv_a")).as("a"), xxhash64(col("conv_b")).as("b"),
-      col("n_blocks")).as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
+  test("pairsFromBlocks ≡ driver brute force (pairs, drop audit, state bound)") {
+    val cap = 10
+    val (pFus, dFus) = Blocking.pairsFromBlocks(hidBlocks, maxBlockSize = cap)
+    // brute force on the driver: distinct members per key, within-block
+    // pairs of every block of 2..cap members, counted per pair
+    val members = hidBlocks.as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).distinct.sorted }
+    val want = members.values.filter(m => m.length >= 2 && m.length <= cap).toSeq
+      .flatMap(_.combinations(2).map(p => (p(0), p(1))))
+      .groupBy(identity).map { case (p, hits) => (p._1, p._2, hits.size.toLong) }.toSet
     val fus = pFus.select(col("conv_a"), col("conv_b"), col("n_blocks"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
-    assert(gen == fus)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(want.nonEmpty && fus == want)
+    // the dropped keys are exactly the keys with more than cap members,
+    // each reported at the documented cap+1 lower bound
+    val oversize = members.collect { case (k, m) if m.length > cap => k }.toSet
+    assert(oversize.nonEmpty)
+    assert(dFus.select("block_key").as[Long].collect().toSet == oversize)
+    assert(dFus.select("block_size").as[Long].collect().forall(_ == cap + 1L))
     // the prePartition plan shape (raw-shuffle-then-aggregate, no map-side
     // partial agg) must be a pure physical rewrite: identical pairs AND
     // identical drop audit
     val (pPre, dPre) =
-      Blocking.pairsFromBlocks(longBlocks, maxBlockSize = 10, prePartition = true)
+      Blocking.pairsFromBlocks(hidBlocks, maxBlockSize = cap, prePartition = true)
     val pre = pPre.select(col("conv_a"), col("conv_b"), col("n_blocks"))
-      .as[(Long, Long, Long)].collect()
-      .map { case (a, b, n) => (math.min(a, b), math.max(a, b), n) }.toSet
+      .as[(Long, Long, Long)].collect().toSet
     assert(pre == fus)
-    assert(dPre.select("block_key").as[Long].collect().toSet ==
-      dFus.select("block_key").as[Long].collect().toSet)
-    // same dropped keys; fused sizes are the documented cap+1 lower bound
-    assert(dGen.select("block_key").as[Long].collect().toSet ==
-      dFus.select("block_key").as[Long].collect().toSet)
-    assert(dFus.select("block_size").as[Long].collect().forall(_ == 11L))
+    assert(dPre.select("block_key").as[Long].collect().toSet == oversize)
     // the aggregator's state bound: saturates at cap+1 distinct, dedups
     val agg = new graft.functions.BoundedCollectSet(4)
     val r = (1L to 100L).foldLeft(agg.zero)((b, v) => agg.reduce(agg.reduce(b, v), v))
@@ -102,6 +102,13 @@ class PipelineSpec extends SparkSpec {
     // merge stays bounded + sorted-distinct from arbitrary partials
     val m2 = agg.merge(Array(1L, 2L, 3L), Array(4L, 5L, 6L, 7L))
     assert(m2.toSeq == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("pairsFromBlocks rejects string ids with an error naming the type") {
+    val strBlocks = Seq((1L, "a"), (1L, "b")).toDF("block_key", "conv_id")
+    val e = intercept[IllegalArgumentException](
+      Blocking.pairsFromBlocks(strBlocks, maxBlockSize = 10))
+    assert(e.getMessage.contains("string"), e.getMessage)
   }
 
   test("threshold-aware string-kernel prune: matched set identical, hopeless pairs skip the kernels") {
