@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")

@@ -145,8 +145,7 @@ object BenchIncremental {
       // round-5 finding (see BenchPipeline.session): block keys are
       // ~unique, sort-based map-side partial agg wins at minutes scale
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
-      .config("spark.locality.wait",
-        sys.env.getOrElse("SPARK_GRAFT_LOCALITY_WAIT", "0"))
+      .config("spark.locality.wait", "0")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val r = measure(spark, nBase, reps)

@@ -49,11 +49,8 @@ object BenchPipeline {
                               input: DataFrame): (Long, Double) = {
     val key = input.queryExecution.analyzed.semanticHash().toString
     val turns = turnCounts.computeIfAbsent(key, _ => input.count())
-    // plan-shape A/B switch (see Pipeline.Config.prePartitionPairs)
-    val cfg = Pipeline.Config(
-      prePartitionPairs = sys.env.get("GRAFT_PAIRS_PREPART").contains("1"))
     val t0 = System.nanoTime()
-    Pipeline.run(input, cfg).clusters.write.mode("overwrite").format("noop").save()
+    Pipeline.run(input).clusters.write.mode("overwrite").format("noop").save()
     val sec = (System.nanoTime() - t0) / 1e9
     // drop this run's stage blocks NOW: localCheckpoint RDDs are otherwise
     // only unpersisted when driver GC reaches them (ContextCleaner), so
@@ -91,10 +88,9 @@ object BenchPipeline {
       // at [2,2]; finer waves shorten the straggler tail exactly where
       // 16 cores share one memory bus.) Identical at every parallelism
       // level (fairness).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_PART_BYTES", (8 * 1024 * 1024).toString))
+      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_PART_BYTES", (8 * 1024 * 1024).toString))
+        (8 * 1024 * 1024).toString)
       // the CC singleton-attach join broadcasts the assignment (10-50 MB
       // at bench scale); the 10 MB default silently degrades it to a
       // sort-merge shuffle of every doc
@@ -113,12 +109,10 @@ object BenchPipeline {
       // saturate the bus. Round 3's raised threshold (keep hash-based)
       // was measured on second-scale inputs where the map fit in L2 —
       // at minutes scale the trade flips.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "128"))
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
       // measured at both cluster sizes (see Bench.clusterScaling): delay
       // scheduling only idles cores here, wait=0 wins at [2,2] AND [8,2]
-      .config("spark.locality.wait",
-        sys.env.getOrElse("SPARK_GRAFT_LOCALITY_WAIT", "0"))
+      .config("spark.locality.wait", "0")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -51,18 +51,10 @@ object ConnectedComponents {
   private val MaxIter = 50
 
   /** edges(src, dst) undirected, self-loops ignored →
-    * assignment(conv_id, cluster_id); only nodes appearing in edges are
-    * returned (callers attach singletons with coalesce, or use
-    * [[runWithUniverse]] which folds the attach into the finisher).
-    *
-    * `localMaxEdges` > 0 enables the hybrid finisher: when the distinct
-    * edge set fits under the bound, the components are closed with a
-    * driver-side union-find instead of O(log n) distributed rounds — the
-    * iterative tail is pure per-round scheduler latency once edges are
-    * small, and "small" here is millions while the upstream stages are the
-    * ones that scale with the lake. Identical output (cluster id = min
-    * member, exactly the star-forest convention); 0 disables (default, and
-    * the TableIO resume path keeps per-round snapshots).
+    * assignment(conv_id, cluster_id) by the distributed rounds; only nodes
+    * appearing in edges are returned (callers attach singletons with
+    * coalesce, or use [[runWithUniverse]], which also owns the driver
+    * finisher). Ids may be of any ordered type.
     */
   def run(edges: DataFrame,
           // lazy localCheckpoint: the round's fingerprint aggregate is the
@@ -70,31 +62,23 @@ object ConnectedComponents {
           // two — the per-round driver latency is the serial floor of the
           // whole pipeline once the data stages scale out
           checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
-          onRound: (Int, Long, Long) => Unit = (_, _, _) => (),
-          localMaxEdges: Long = 0L,
-          edgesDistinct: Boolean = false,
-          // a caller-supplied upper bound on the canonical edge count
-          // (e.g. observed during the scoring stage's own materialization
-          // job) lets the finisher guard skip its count() pass entirely —
-          // canonicalize only ever drops rows, so any pre-filter row count
-          // is a safe over-estimate for the `<= localMaxEdges` check
-          knownEdgeCount: Option[Long] = None): DataFrame = {
-    val e = canonicalize(edges, checkpoint, edgesDistinct)
-    if (useLocalFinisher(e, localMaxEdges, knownEdgeCount)) {
-      assignmentDf(e.sparkSession,
-        streamingCollectUnion(e).resolved(keepRoots = true))
-    } else distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, onRound)
-  }
+          onRound: (Int, Long, Long) => Unit = (_, _, _) => ()): DataFrame =
+    distributedAssignment(canonicalize(edges, checkpoint), checkpoint, onRound)
 
-  /** CC + singleton attach in one operator: every id in
+  /** CC + singleton attach in one operator over string ids: every id in
     * `universe(conv_id)` gets a cluster_id (its component's min member, or
-    * itself when unlinked). On the driver-finisher path the attach is a
-    * broadcast-map lookup — a narrow projection over `universe`, no join,
-    * no shuffle — which removes the separate shuffled singleton-attach
-    * join that was the pipeline's serial tail (VERDICT r3 §perf). The
-    * distributed path (edge set over the bound, or non-string ids) keeps
-    * the left-join + coalesce attach.
+    * itself when unlinked).
+    *
+    * `localMaxEdges` > 0 enables the driver finisher: when the distinct
+    * edge set fits under the bound, a driver union-find closes the
+    * components instead of O(log n) distributed rounds, whose tail is pure
+    * per-round scheduler latency once edges are small. Identical output
+    * (cluster id = min member); 0 disables (default, and the TableIO resume
+    * path keeps per-round snapshots). The finisher attaches by a
+    * broadcast-map lookup over `universe` (no join, no shuffle); the rounds
+    * keep the left-join + coalesce attach. `knownEdgeCount`, any upper
+    * bound on the canonical edge count (e.g. observed by the scoring
+    * stage's own job), lets the guard skip its count() pass.
     */
   def runWithUniverse(edges: DataFrame, universe: DataFrame,
                       checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),
@@ -103,14 +87,17 @@ object ConnectedComponents {
                       edgesDistinct: Boolean = false,
                       knownEdgeCount: Option[Long] = None,
                       maxBroadcastNodes: Int = MaxBroadcastNodes): DataFrame = {
+    // the finisher interns ids as strings and orders them lexicographically
+    Seq("src", "dst").foreach { c =>
+      val t = edges.schema(c).dataType
+      require(t == org.apache.spark.sql.types.StringType,
+        s"runWithUniverse needs string $c, got ${t.simpleString}")
+    }
     val spark = edges.sparkSession
     val e = canonicalize(edges, checkpoint, edgesDistinct)
-    if (useLocalFinisher(e, localMaxEdges, knownEdgeCount)) {
-      // roots are dropped from the shipped assignment: both attach paths
-      // fall back to identity for absent keys (the broadcast lookup
-      // explicitly, joinAttach via coalesce), and a root's cluster id IS
-      // itself — so the payload carries only non-root members (~the
-      // duplicate docs), typically a third smaller than the full node map
+    if (localMaxEdges > 0 && knownEdgeCount.getOrElse(e.count()) <= localMaxEdges) {
+      // the attach map holds non-root members only (~the duplicate docs):
+      // both attach paths fall back to identity for absent keys
       val uf = streamingCollectUnion(e)
       if (uf.nonRootCount <= maxBroadcastNodes) {
         // ship a compact byte blob (names + root ordinals straight from
@@ -130,9 +117,9 @@ object ConnectedComponents {
         // re-executing the lookup across plan branches
         universe.select(col("conv_id"),
           look(col("conv_id")).as("cluster_id"))
-      } else joinAttach(universe, assignmentDf(spark, uf.resolved(keepRoots = false)))
+      } else joinAttach(universe, assignmentDf(spark, uf.resolved()))
     } else joinAttach(universe, distributedAssignment(
-      dedupForRounds(e, checkpoint, edgesDistinct), checkpoint, onRound))
+      if (edgesDistinct) checkpoint(e.distinct(), -1) else e, checkpoint, onRound))
   }
 
   /** The broadcast attach payload. Spark keeps one deserialized copy of
@@ -222,8 +209,7 @@ object ConnectedComponents {
     * narrow passes over the cached scored stage: count guard + collect).
     * The union-find is duplicate-tolerant, so a hid-collision-induced
     * duplicate string pair costs nothing; the distributed rounds re-dedup
-    * via [[dedupForRounds]] because their convergence fingerprint assumes
-    * a distinct edge set.
+    * because their convergence fingerprint assumes a distinct edge set.
     */
   private def canonicalize(edges: DataFrame,
                            checkpoint: (DataFrame, Int) => DataFrame,
@@ -232,24 +218,6 @@ object ConnectedComponents {
       least(col("src"), col("dst")).as("u"), greatest(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
     if (edgesDistinct) proj else checkpoint(proj.distinct(), -1)
-  }
-
-  private def dedupForRounds(e: DataFrame,
-                             checkpoint: (DataFrame, Int) => DataFrame,
-                             edgesDistinct: Boolean): DataFrame =
-    if (edgesDistinct) checkpoint(e.distinct(), -1) else e
-
-  /** The driver finisher reads ids as strings; non-string ids (valid for
-    * the distributed path, which only needs an ordering) fall through to
-    * the iterative rounds rather than risking a ClassCastException or a
-    * lexicographic-vs-native ordering divergence.
-    */
-  private def useLocalFinisher(e: DataFrame, localMaxEdges: Long,
-                               knownEdgeCount: Option[Long] = None): Boolean = {
-    val stringIds = e.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.StringType)
-    localMaxEdges > 0 && stringIds &&
-      knownEdgeCount.getOrElse(e.count()) <= localMaxEdges
   }
 
   /** Incremental union-find with path compression, min member as the
@@ -317,21 +285,19 @@ object ConnectedComponents {
       n
     }
 
-    /** node → final root. `keepRoots = false` omits root self-entries —
-      * correct wherever the consumer falls back to identity for absent
-      * keys (both of [[runWithUniverse]]'s attach paths); [[run]] keeps
-      * them because its contract is "every node appearing in edges is
-      * returned".
+    /** (non-root node, final root) pairs; roots are omitted because both
+      * of [[runWithUniverse]]'s attach paths fall back to identity for
+      * absent keys.
       */
-    def resolved(keepRoots: Boolean): java.util.HashMap[String, String] = {
-      val out = new java.util.HashMap[String, String](count)
+    def resolved(): Seq[(String, String)] = {
+      val out = new scala.collection.mutable.ArrayBuffer[(String, String)](count)
       var i = 0
       while (i < count) {
         val r = find(i)
-        if (keepRoots || r != i) out.put(names(i), names(r))
+        if (r != i) out += ((names(i), names(r)))
         i += 1
       }
-      out
+      out.toSeq
     }
 
     /** Compact attach payload straight from the union-find arrays — no
@@ -382,27 +348,18 @@ object ConnectedComponents {
     }
   }
 
+  /** Only reached past maxBroadcastNodes: a LocalRelation that size is a
+    * plan-embedded monster serialized with every task, so the rows ship
+    * once through parallelize (the attach join then shuffles). Round 3
+    * measured the two tempting "fixes" and both lose: broadcast-hinting
+    * the parallelize DF round-trips every row driver → executors → driver
+    * (+2 s), and a broadcast-hinted multi-million-row LocalRelation costs
+    * ~10 s in driver-side encode + double plan serialization.
+    */
   private def assignmentDf(spark: org.apache.spark.sql.SparkSession,
-                           resolved: java.util.HashMap[String, String]): DataFrame = {
-    val out = new scala.collection.mutable.ArrayBuffer[(String, String)](resolved.size())
-    resolved.forEach((k, v) => out += ((k, v)))
-    import spark.implicits._
-    // small assignments ride back as a LocalRelation (size stats known →
-    // a downstream attach join can broadcast); past ~1M nodes a
-    // LocalRelation is a plan-embedded monster serialized with every task,
-    // so ship the rows once through parallelize instead (the attach join
-    // then shuffles — correct at that size). Round 3 measured the two
-    // tempting "fixes" and both lose: broadcast-hinting the parallelize DF
-    // round-trips every row driver → executors → driver (+2 s), and a
-    // broadcast-hinted multi-million-row LocalRelation costs ~10 s in
-    // driver-side encode + double plan serialization — the plain shuffled
-    // attach join is the fastest measured shape at this size.
-    if (out.size <= 1000000) out.toSeq.toDF("conv_id", "cluster_id")
-    else spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq,
-        math.max(spark.sparkContext.defaultParallelism, 8)))
-      .toDF("conv_id", "cluster_id")
-  }
+                           pairs: Seq[(String, String)]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(pairs,
+      math.max(spark.sparkContext.defaultParallelism, 8))).toDF("conv_id", "cluster_id")
 
   /** The distributed large/small-star rounds + star-forest readout. */
   private def distributedAssignment(e0: DataFrame,

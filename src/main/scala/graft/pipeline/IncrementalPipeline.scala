@@ -323,9 +323,7 @@ object IncrementalPipeline {
     *                      accumulated [[Result.matchedEdges]] appends
     */
   def retract(retractIds: DataFrame, priorClusters: DataFrame,
-              priorEdges: DataFrame,
-              localMaxEdges: Long =
-                ConnectedComponents.defaultLocalMaxEdges): RetractResult = {
+              priorEdges: DataFrame): RetractResult = {
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val ids = retractIds.select("conv_id").distinct()
       .localCheckpoint(false, ser) // consumed by four joins below
@@ -359,8 +357,8 @@ object IncrementalPipeline {
       .join(survivors.select(col("conv_id").as("conv_a")),
         Seq("conv_a"), "left_semi")
       .select(col("conv_a").as("src"), col("conv_b").as("dst"))
-    val reclustered = ConnectedComponents.runWithUniverse(
-      keptEdges, survivors.select("conv_id"), localMaxEdges = localMaxEdges)
+    val reclustered = ConnectedComponents.runWithUniverse(keptEdges,
+      survivors.select("conv_id"), localMaxEdges = ConnectedComponents.defaultLocalMaxEdges)
     RetractResult(
       reclustered.unionByName(unaffected.select("conv_id", "cluster_id")),
       removedEdges)

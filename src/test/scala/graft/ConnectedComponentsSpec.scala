@@ -10,6 +10,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     ConnectedComponents.run(df).as[(String, String)].collect().toMap
   }
 
+  /** The edge endpoints as a `runWithUniverse` universe (no singletons). */
+  private def endpoints(edges: Seq[(String, String)]) =
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.toDF("conv_id")
+
   test("chain collapses to one component rooted at min id") {
     val m = cc(Seq("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e"))
     assert(m.values.toSet == Set("a"))
@@ -63,10 +67,11 @@ class ConnectedComponentsSpec extends SparkSpec {
       val ids = (0 until n).map(i => f"n$i%04d")
       val edges = (0 until 180).map(_ => (ids(rnd.nextInt(n)), ids(rnd.nextInt(n))))
       val df = edges.toDF("src", "dst")
-      val distributed = ConnectedComponents.run(df)
+      val universe = endpoints(edges)
+      val distributed = ConnectedComponents.runWithUniverse(df, universe)
         .as[(String, String)].collect().toMap
-      val hybrid = ConnectedComponents.run(df, localMaxEdges = 1000000L)
-        .as[(String, String)].collect().toMap
+      val hybrid = ConnectedComponents.runWithUniverse(df, universe,
+        localMaxEdges = 1000000L).as[(String, String)].collect().toMap
       assert(hybrid == distributed, s"seed=$seed")
     }
   }
@@ -80,10 +85,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     val canonical = raw.filter { case (a, b) => a != b }
       .map { case (a, b) => if (a < b) (a, b) else (b, a) }.distinct
     val df = raw.toDF("src", "dst")
+    val universe = endpoints(raw)
 
     def runCounting(bound: Long): (Map[String, String], Int) = {
       var rounds = 0
-      val m = ConnectedComponents.run(df, localMaxEdges = bound,
+      val m = ConnectedComponents.runWithUniverse(df, universe, localMaxEdges = bound,
         onRound = (_, _, _) => rounds += 1).as[(String, String)].collect().toMap
       (m, rounds)
     }
@@ -157,20 +163,29 @@ class ConnectedComponentsSpec extends SparkSpec {
       .filter { case (a, b) => a != b }
       .map { case (a, b) => if (a < b) (a, b) else (b, a) }.distinct
     val df = distinctEdges.toDF("src", "dst")
+    val universe = endpoints(distinctEdges)
     val base = ConnectedComponents.run(df).as[(String, String)].collect().toMap
     for (bound <- Seq(0L, 1000000L)) { // distributed and finisher paths
-      val got = ConnectedComponents.run(df, localMaxEdges = bound,
+      val got = ConnectedComponents.runWithUniverse(df, universe, localMaxEdges = bound,
         edgesDistinct = true).as[(String, String)].collect().toMap
       assert(got == base, s"bound=$bound")
     }
   }
 
-  test("numeric ids under localMaxEdges fall back to distributed rounds (no driver cast crash)") {
+  test("run: numeric ids converge through the distributed rounds") {
     val df = Seq((3L, 1L), (1L, 2L), (10L, 20L)).toDF("src", "dst")
-    // round 2 threw ClassCastException in the driver finisher (getString on
-    // LongType); now non-string ids skip the finisher and still converge
-    val m = ConnectedComponents.run(df, localMaxEdges = 1000000L)
-      .as[(Long, Long)].collect().toMap
+    val m = ConnectedComponents.run(df).as[(Long, Long)].collect().toMap
     assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 20L -> 10L))
+  }
+
+  test("runWithUniverse rejects non-string ids with an error naming the type") {
+    // the driver finisher interns ids as strings; a numeric id would order
+    // differently there than in the rounds, so it is refused up front
+    val df = Seq((3L, 1L), (1L, 2L)).toDF("src", "dst")
+    val universe = Seq(1L, 2L, 3L).toDF("conv_id")
+    val e = intercept[IllegalArgumentException] {
+      ConnectedComponents.runWithUniverse(df, universe, localMaxEdges = 1000000L)
+    }
+    assert(e.getMessage.contains("bigint"), e.getMessage)
   }
 }
