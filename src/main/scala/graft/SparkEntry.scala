@@ -39,6 +39,14 @@ object SparkEntry {
     */
   private def toks(c: Column) = tokens(c)
 
+  /** Round to 4 places through a decimal of scale 10, as the oracle's
+    * `ROUND4` does: a double one ulp under a half (0.9562499999999999)
+    * then rounds up in both engines, where a plain double round splits
+    * them (Spark 0.9562, DuckDB 0.9563).
+    */
+  private[graft] def round4(c: Column): Column =
+    round(c.cast("decimal(20,10)"), 4).cast("double")
+
   /** Flagship: the full record-linkage pipeline on a deterministic
     * synthetic transcript table (BASELINE.json north rule) — clusters of
     * near-duplicate conversations. Driver smoke-checks rows > 0.
@@ -404,13 +412,8 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       // facc feeds the pair self-join (twice), the frequency dim and the
       // and_freq join: one materialization instead of five tokenize
-      // passes. Per-doc dedup happens map-side (array_distinct before the
-      // explode), so the index build needs no global dedup shuffle —
-      // identical rows (doc_id keys per-doc-distinct entities)
-      val facc = shared(Features.faccIndex(
-        docs.select(col("doc_id"),
-          explode(array_distinct(toks(col("text")))).as("entity")),
-        rowsDistinct = true))
+      // passes (doc_id is the documents key, as faccIndex requires)
+      val facc = shared(Features.faccIndex(docs, toks(col("text"))))
       val numDocs = docs.count()
       // candidate pairs from actual co-occurrence (facc self-join on
       // doc_id) — what a real caller feeds the operator. The round-2
@@ -502,13 +505,8 @@ object SparkEntry {
     "q44_facc_set_features" -> ((s, d) => {
       val docs = t(s, d, "documents")
       // faccSetFeatures consumes facc in three branches (ef, perDoc, the
-      // or/and counts): one materialization of the tokenize pass. Per-doc
-      // dedup is map-side (array_distinct before explode) — no global
-      // dedup shuffle, identical rows (see q37)
-      val facc = shared(Features.faccIndex(
-        docs.select(col("doc_id"),
-          explode(array_distinct(toks(col("text")))).as("entity")),
-        rowsDistinct = true))
+      // or/and counts): one materialization of the tokenize pass (see q37)
+      val facc = shared(Features.faccIndex(docs, toks(col("text"))))
       val numDocs = docs.count()
       // deterministic 3-entity sets: the 3 lexicographically-smallest
       // distinct tokens of every 17th document
@@ -714,10 +712,10 @@ object SparkEntry {
       graft.streaming.IncrementalLink
         .linkAgainstCorpus(stream, index, Pipeline.Config(scoreThreshold = 0.3))
         .select(col("conv_id"), col("corpus_id"),
-          round(col("jaccard"), 4).as("jaccard"),
-          round(col("jw"), 4).as("jw"),
-          round(col("lev_sim"), 4).as("lev_sim"),
-          round(col("score"), 4).as("score"))
+          round4(col("jaccard")).as("jaccard"),
+          round4(col("jw")).as("jw"),
+          round4(col("lev_sim")).as("lev_sim"),
+          round4(col("score")).as("score"))
     }),
 
     // ---- blocking-quality metrics (pairs completeness / reduction
@@ -817,6 +815,8 @@ object SparkEntry {
   // expressions above; every aggregate/computed column aliased to the
   // same name as the Spark side.
   // ------------------------------------------------------------------
+  // SQL twin of `round4`
+  private def ROUND4(x: String) = s"round(($x)::DECIMAL(20, 10), 4)::DOUBLE"
   private val NORM = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
   private val TOKS = s"list_filter(regexp_split_to_array($NORM, ' '), x -> x <> '')"
   // all word n-grams of lengths 1..N (space-joined)
@@ -1783,7 +1783,7 @@ object SparkEntry {
     // left-to-right mixture arithmetic mirror Scoring/levenshtein_sim
     // exactly.
     "q53_stream_static_link" ->
-      """WITH sf AS (SELECT conv_id, tok_set, prefix, block_key
+      s"""WITH sf AS (SELECT conv_id, tok_set, prefix, block_key
                      FROM '/tmp/graft-aux/q53_stream/*.parquet'),
             ix AS (SELECT block_key, corpus_id, corpus_tok_set, corpus_prefix
                    FROM '/tmp/graft-aux/q53_index/*.parquet'),
@@ -1801,15 +1801,15 @@ object SparkEntry {
                      ELSE 1.0 - levenshtein(fs.prefix, fc.corpus_prefix)::DOUBLE
                           / greatest(len(fs.prefix), len(fc.corpus_prefix))::DOUBLE END AS lev_sim
               FROM cand c JOIN fs USING (conv_id) JOIN fc USING (corpus_id))
-          SELECT conv_id, corpus_id, round(jaccard, 4) AS jaccard,
-                 round(jw, 4) AS jw, round(lev_sim, 4) AS lev_sim,
-                 round(0.6 * jaccard + 0.25 * jw + 0.15 * lev_sim, 4) AS score
+          SELECT conv_id, corpus_id, ${ROUND4("jaccard")} AS jaccard,
+                 ${ROUND4("jw")} AS jw, ${ROUND4("lev_sim")} AS lev_sim,
+                 ${ROUND4("0.6 * jaccard + 0.25 * jw + 0.15 * lev_sim")} AS score
           FROM scored
           WHERE 0.6 * jaccard + 0.25 * jw + 0.15 * lev_sim >= 0.3""",
 
     "q54_blocking_metrics" ->
       s"""WITH sh AS (SELECT doc_id, unnest(list_distinct(${SHINGLES(3)})) AS block_key
-                      FROM (SELECT doc_id, $TOKS AS t FROM documents)),
+                      FROM (SELECT doc_id, $TOKS AS t FROM documents) WHERE len(t) > 0),
             keep AS (SELECT block_key FROM sh GROUP BY block_key
                      HAVING count(*) BETWEEN 2 AND 64),
             b AS (SELECT sh.doc_id, sh.block_key FROM sh JOIN keep USING (block_key)),

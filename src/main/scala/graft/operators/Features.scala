@@ -22,19 +22,16 @@ object Features {
 
   // ---------- FACC co-occurrence (facc_feat.py) ----------
 
-  /** FACC index build (facc_indexer.py:27-71): annotation rows →
-    * deduplicated (doc_id, entity) co-occurrence table.
+  /** FACC index build (facc_indexer.py:27-71): one (doc_id, entity) row
+    * per distinct entity of each doc, `entities` being an array column over
+    * `docs`. The dedup is per doc and map-side (`array_distinct` before the
+    * explode), so the build needs no whole-table dedup shuffle.
     *
-    * `rowsDistinct = true`: the caller vouches the input rows are already
-    * distinct (e.g. built from `explode(array_distinct(...))` per doc —
-    * per-doc-distinct entities with doc_id in the key ARE globally
-    * distinct), which skips the operator's whole-table dedup SHUFFLE —
-    * the dominant exchange of the q37/q44 index build at bench scale.
+    * Precondition: `doc_id` is unique in `docs`. Only then are the rows
+    * globally distinct; a repeated doc_id repeats its rows.
     */
-  def faccIndex(annotations: DataFrame, rowsDistinct: Boolean = false): DataFrame = {
-    val a = annotations.select("doc_id", "entity")
-    if (rowsDistinct) a else a.distinct()
-  }
+  def faccIndex(docs: DataFrame, entities: Column): DataFrame =
+    docs.select(col("doc_id"), explode(array_distinct(entities)).as("entity"))
 
   /** Pairwise FACC features for candidate entity pairs (e1 < e2):
     * and_freq / or_freq document counts, joint probability, binary entropy
