@@ -11,11 +11,10 @@ import graft.pipeline.{IncrementalPipeline, Pipeline, TranscriptGen}
   *     per-query timings, the end-to-end pipeline at two thread levels
   *     (local[N/4] vs local[N]) and at two executor counts
   *     (local-cluster[2,2] vs [8,2], the N-vs-4N scaling evidence), and the
-  *     incremental-vs-full block. Prints ONE JSON line
+  *     incremental-vs-full block. Writes ONE JSON line
   *     {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...,
-  *      "pipeline":{...},"pipeline_cluster":{...},"incremental":{...}},
-  *     writes it to BENCH.json (SPARK_GRAFT_BENCH_OUT), then prints the same
-  *     line with an empty "queries" map.
+  *      "pipeline":{...},"pipeline_cluster":{...},"incremental":{...}}
+  *     to BENCH.json (SPARK_GRAFT_BENCH_OUT) and prints it last.
   *   runMain graft.Bench pipeline <nBase> [cores] [reps]
   *     one full-size untimed warmup, then `reps` timed runs (default 1):
   *     `PIPELINE_RUN` per rep and a `PIPELINE` line with the minimum.
@@ -492,19 +491,14 @@ object Bench {
         f""""sec_lo":$tLo%.2f,"sec_hi":$tHi%.2f,""" +
         f""""turns_per_sec_lo":$thrLo%.1f,"turns_per_sec_hi":$thrHi%.1f,""" +
         f""""scaling_efficiency":$eff%.3f}"""
-    val json =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","pipeline":$pipeline,"pipeline_cluster":$cluster,"incremental":$incremental}"""
-    println(json)
-    // the file is the robust artifact: sbt interleaves stderr noise around
-    // the printed line
+    // the file is the robust artifact (sbt interleaves stderr noise around
+    // the printed line); the same line is printed LAST, so the tail ends
+    // with one complete, parseable JSON object
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
+    val json =
+      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","full_queries_in":"$out","pipeline":$pipeline,"pipeline_cluster":$cluster,"incremental":$incremental}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // compact line printed LAST, without the per-query map (~3.5 kB, which
-    // a log-tail reader can clip mid-line): the tail always ends with one
-    // complete, parseable JSON object
-    val compact =
-      f"""{"metric":"total","value":$total%.2f,"unit":"sec","queries":{},"errors":$errs,"sf":"$sfDir","full_queries_in":"$out","pipeline":$pipeline,"pipeline_cluster":$cluster,"incremental":$incremental}"""
-    println(compact)
+    println(json)
   }
 }

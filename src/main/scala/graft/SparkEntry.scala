@@ -561,7 +561,7 @@ object SparkEntry {
         concat(col("lang"), lit("_"), col("doc_id")).as("qid"),
         array_join(slice(tok, 1, 8), " ").as("query"),
         array_join(slice(tok, 1, 2), " ").as("mention"),
-        element_at(tok, 1).as("freebase_id"))
+        try_element_at(tok, lit(1)).as("freebase_id"))
       // yerdCvInstances reads gt in six branches (queries, annotated ×3,
       // positives): one materialization of the tokenize + slice projection
       graft.ml.Ltr.yerdCvInstances(shared(gt), 0.1, 8)
@@ -643,7 +643,7 @@ object SparkEntry {
       val q = docs.where(pmod(col("doc_id"), lit(17)) === 0)
         .select(col("doc_id").as("qid"),
           array_join(slice(toks(col("text")), 1, 5), " ").as("qtext"),
-          element_at(toks(col("text")), 2).as("mention"),
+          try_element_at(toks(col("text")), lit(2)).as("mention"),
           col("lang"), col("source"))
         .where(col("mention").isNotNull)
       // contextSim derives base/terms/tp from cands in several branches

@@ -150,14 +150,16 @@ object HashingKernels {
   private val Space = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
 
   /** Contiguous k-token shingles (space-joined strings), whole-doc fallback
-    * for docs shorter than k — the native replacement for the
+    * for docs shorter than k, none for zero tokens (as [[shingleHashes]]:
+    * empty docs must not share a block) — the native replacement for the
     * transform/slice/array_join HOF tree (HOFs are interpreted, not
     * codegen'd; measured ~0.5 ms/doc interpreted vs ~µs here).
     */
   def wordShingles(toks: ArrayData, k: Int): ArrayData = {
     val n = toks.numElements()
+    if (n == 0) return new GenericArrayData(Array.empty[Any])
     if (n < k) {
-      val parts = new Array[org.apache.spark.unsafe.types.UTF8String](math.max(2 * n - 1, 0))
+      val parts = new Array[org.apache.spark.unsafe.types.UTF8String](2 * n - 1)
       var j = 0
       while (j < n) {
         if (j > 0) parts(2 * j - 1) = Space

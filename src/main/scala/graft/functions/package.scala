@@ -68,16 +68,18 @@ package object functions {
             array_join(slice(toks, i, n), " ")))))
 
   /** Contiguous word shingles of exactly k tokens (space-joined); docs with
-    * fewer than k tokens yield the whole doc as a single shingle so no doc
-    * is unblockable. Native codegen'd expression; [[word_shingles_hof]] is
-    * the transparent reference implementation tests cross-check against.
+    * 1..k-1 tokens yield the whole doc as a single shingle so no doc is
+    * unblockable, and zero-token docs yield none. Native codegen'd
+    * expression; [[word_shingles_hof]] is the transparent reference
+    * implementation tests cross-check against.
     */
   def word_shingles(toks: Column, k: Int): Column =
     Internals.column(WordShinglesExpr(Internals.expression(toks), k))
 
   /** HOF-composed shingle generator (interpreted — test reference only). */
   def word_shingles_hof(toks: Column, k: Int): Column =
-    when(size(toks) < k, array(array_join(toks, " ")))
+    when(size(toks) === 0, array().cast("array<string>"))
+      .when(size(toks) < k, array(array_join(toks, " ")))
       .otherwise(
         transform(sequence(lit(1), size(toks) - k + 1), i =>
           array_join(slice(toks, i, lit(k)), " ")))

@@ -90,15 +90,4 @@ object BlockingMetrics {
         col("gt_pairs"), col("gt_covered"),
         col("pair_completeness"), col("reduction_ratio"))
   }
-
-  /** Per-block-size histogram (size → number of blocks) — the skew view
-    * that tells WHERE the candidate mass concentrates; pairs with the
-    * drop audit of `Blocking.pairsFromBlocks` (whose cap decides the
-    * sizes a run actually compares).
-    */
-  def blockSizeHistogram(blocks: DataFrame,
-                         idCol: String = "conv_id",
-                         keyCol: String = "block_key"): DataFrame =
-    blocks.groupBy(col(keyCol)).agg(count(lit(1)).as("block_size"))
-      .groupBy("block_size").agg(count(lit(1)).as("n_blocks"))
 }

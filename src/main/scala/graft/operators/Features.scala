@@ -12,7 +12,6 @@ import graft.functions._
   *  - FACC co-occurrence features: nordlys/erd/features/facc_feat.py:44-113
   *  - wikilink graph set features: graph_feat.py:27-117
   *  - mention count features: mention_feat.py:26-68
-  *  - entity dim features: entity_feat.py:23-38
   *  - boolean/positional entity-mention features: entity_mention_feat.py:27-63
   *  - largest-delta prune: isf/pruner.py:11-42
   *  - instance concatenation with stable id reassign: ml/instances.py:268-283
@@ -167,16 +166,6 @@ object Features {
       .withColumn("common_neighbors",
         when(col("n") === 1, -1L).otherwise(col("common_neighbors")))
   }
-
-  /** Entity dim features (entity_feat.py:23-38): distinct redirect /
-    * wikilink counts, null/scalar-tolerant (the Mongo values are
-    * dynamically string-or-list; here the dim is typed arrays).
-    */
-  def entityFeatures(entities: DataFrame): DataFrame =
-    entities.withColumn("n_redirects",
-      size(array_distinct(coalesce(col("redirects"), array().cast("array<string>")))))
-      .withColumn("n_links",
-        size(array_distinct(coalesce(col("links"), array().cast("array<string>")))))
 
   // ---------- mention features (mention_feat.py) ----------
 

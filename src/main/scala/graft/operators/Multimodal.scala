@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * columns with typed metadata.
   *
   * The Spark-side plumbing is real and tested — schema, partitioning,
-  * batched per-partition decode boundary, frame-sampling fan-out. The
-  * codec itself is a STUB (this container has no image/audio libraries):
+  * batched per-partition decode boundary. The codec itself is a STUB
+  * (this container has no image/audio libraries):
   * [[decodeStub]] produces deterministic fake features from the bytes.
   * On a real cluster the stub body is replaced by the actual decoder
   * (JNI/ffmpeg, or `mapInPandas` from PySpark callers) — signatures and
@@ -67,16 +67,4 @@ object Multimodal {
     while (i < bytes.length) { h = (h * 31 + (bytes(i) & 0xFF)) % 1000000007L; i += 1 }
     (((h + j * 2654435761L) % 2000L) - 1000L) / 1000.0f
   }
-
-  /** Frame-sampling fan-out for video rows: one output row per sampled
-    * frame (every `everyNth` of `nFrames`), pure plan-side explode — the
-    * per-frame decode then goes through the same decode boundary.
-    */
-  def sampleFrames(media: DataFrame, nFrames: Int, everyNth: Int): DataFrame =
-    media.where(col("kind") === "video")
-      .select(col("media_id"), col("bytes"),
-        explode(sequence(lit(0), lit(nFrames - 1), lit(everyNth))).as("frame_idx"))
-      .select(col("media_id"), col("frame_idx"),
-        // frame payload slice stub: window into the encoded bytes
-        col("bytes").substr(col("frame_idx") * 16 + 1, lit(16)).as("frame_bytes"))
 }

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * little more bandwidth but are collision-free and keep cluster ids
   * human-readable (cluster id = min conv_id of the component).
   *
-  * Every iteration is materialized through `checkpoint` — in production a
-  * TableIO snapshot (cuts lineage, enables resume-from-round-k), in tests
-  * `localCheckpoint`. Convergence = stable (count, hash-sum) fingerprint of
-  * the edge set: one cheap aggregate per round instead of a set-difference
-  * join.
+  * Every iteration is materialized through `checkpoint` (the pipeline
+  * passes a serialized `localCheckpoint`: it cuts lineage; a crashed run
+  * redoes CC from the edges). Convergence = stable (count, hash-sum)
+  * fingerprint of the edge set: one cheap aggregate per round instead of a
+  * set-difference join.
   */
 object ConnectedComponents {
 
@@ -73,12 +73,12 @@ object ConnectedComponents {
     * edge set fits under the bound, a driver union-find closes the
     * components instead of O(log n) distributed rounds, whose tail is pure
     * per-round scheduler latency once edges are small. Identical output
-    * (cluster id = min member); 0 disables (default, and the TableIO resume
-    * path keeps per-round snapshots). The finisher attaches by a
-    * broadcast-map lookup over `universe` (no join, no shuffle); the rounds
-    * keep the left-join + coalesce attach. `knownEdgeCount`, any upper
-    * bound on the canonical edge count (e.g. observed by the scoring
-    * stage's own job), lets the guard skip its count() pass.
+    * (cluster id = min member); 0 (the default) disables. The finisher
+    * attaches by a broadcast-map lookup over `universe` (no join, no
+    * shuffle); the rounds keep the left-join + coalesce attach.
+    * `knownEdgeCount`, any upper bound on the canonical edge count (e.g.
+    * observed by the scoring stage's own job), lets the guard skip its
+    * count() pass.
     */
   def runWithUniverse(edges: DataFrame, universe: DataFrame,
                       checkpoint: (DataFrame, Int) => DataFrame = (df, _) => df.localCheckpoint(false),

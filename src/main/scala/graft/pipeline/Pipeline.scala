@@ -16,19 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
-  /** blocking strategies */
-  sealed trait BlockingMode
-  case object ExactBlocking extends BlockingMode
-  case object LshBlocking extends BlockingMode
-  case object HybridBlocking extends BlockingMode
-
   /** Linkage parameters of the batch pipeline, the incremental pipeline
     * and the streaming linker ([[graft.streaming.IncrementalLink]]), so
     * all three derive the same block keys and scores.
     */
   case class Config(
       shingleK: Int = 3,
-      blocking: BlockingMode = HybridBlocking,
       lshShingleK: Int = 2,
       numHashes: Int = 96,
       bands: Int = 24,
@@ -71,11 +64,6 @@ object Pipeline {
   def runCheckpointed(transcripts: DataFrame, cfg: Config, io: TableIO): StageResult =
     runStages(transcripts, cfg, Some(io))
 
-  /** Snapshot reuse is only sound under the Config that produced the
-    * snapshots — a re-run with different parameters against the same root
-    * must fail loudly, not silently serve stale clusters. The fingerprint
-    * is stored as a one-row table in the same snapshot layout.
-    */
   /** Bumped whenever a stage's snapshot SCHEMA changes (v2: docs carry the
     * hid pair-key column; v3: docs carry `tokh` token hashes instead of
     * token strings) so resume against snapshots written by an older
@@ -83,6 +71,11 @@ object Pipeline {
     */
   private val SnapshotLayoutVersion = 3
 
+  /** Snapshot reuse is only sound under the Config that produced the
+    * snapshots — a re-run with different parameters against the same root
+    * must fail loudly, not silently serve stale clusters. The fingerprint
+    * is stored as a one-row table in the same snapshot layout.
+    */
   private def validateConfigFingerprint(t: TableIO, cfg: Config,
                                         spark: org.apache.spark.sql.SparkSession): Unit = {
     val fp = s"v$SnapshotLayoutVersion:$cfg"
@@ -114,17 +107,9 @@ object Pipeline {
     * linkage relies on to join a delta's blocks against a prior corpus
     * snapshot's.
     */
-  def blocksPayload(docs: DataFrame, cfg: Config): DataFrame = {
-    val blockInput = docs.select(col("hid").as("conv_id"), col("tokh").as("tokens"))
-    cfg.blocking match {
-      case ExactBlocking => Blocking.exactShingleBlocks(blockInput, cfg.shingleK)
-      case LshBlocking =>
-        Blocking.minhashLshBlocks(blockInput, cfg.lshShingleK, cfg.numHashes, cfg.bands)
-      case HybridBlocking =>
-        Blocking.hybridBlocks(blockInput, cfg.shingleK, cfg.lshShingleK,
-          cfg.numHashes, cfg.bands, cfg.winnowWindow)
-    }
-  }
+  def blocksPayload(docs: DataFrame, cfg: Config): DataFrame =
+    Blocking.hybridBlocks(docs.select(col("hid").as("conv_id"), col("tokh").as("tokens")),
+      cfg.shingleK, cfg.lshShingleK, cfg.numHashes, cfg.bands, cfg.winnowWindow)
 
   private def runStages(transcripts: DataFrame, cfg: Config,
                         io: Option[TableIO]): StageResult = {
@@ -246,28 +231,22 @@ object Pipeline {
       case None => edgesDf
     }
 
+    // the `clusters` snapshot is the resume point under TableIO: a crashed
+    // run redoes CC from its edges, so its rounds checkpoint in memory in
+    // both modes
     val clusters = stage("clusters") {
-      val checkpointFn: (DataFrame, Int) => DataFrame = io match {
-        // one table per round (resume-from-round-k; round 1 overwrote a
-        // single "cc_round" table, making documented resume impossible)
-        case Some(t) => (df, i) => { t.write(df, s"cc_round_$i"); t.read(s"cc_round_$i") }
+      // hybrid finisher: when the match-edge set is under the heap-derived
+      // bound (~4M at an 8 GB driver), close components with a driver
+      // union-find — the distributed rounds' per-round latency is the
+      // pipeline's serial floor, and millions of edges are noise next to
+      // the upstream stages that actually scale with the lake. Singleton
+      // attach is folded INTO the finisher (broadcast-map lookup over docs
+      // — no shuffled join; VERDICT r3 "clusters is the scaling floor").
+      ConnectedComponents.runWithUniverse(edges, docs.select(col("conv_id")),
         // lazy: the CC round's own fingerprint aggregate materializes it —
         // one job per round instead of two (driver latency is CC's floor)
-        case None => (df, _) => df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      }
-      // hybrid finisher on the in-memory path: when the match-edge set is
-      // under the heap-derived bound (~4M at an 8 GB driver), close
-      // components with a driver union-find — the distributed rounds'
-      // per-round latency is the pipeline's serial floor, and millions of
-      // edges are noise next to the upstream stages that actually scale
-      // with the lake. Singleton attach is folded INTO the finisher
-      // (broadcast-map lookup over docs — no shuffled join; VERDICT r3
-      // "clusters is the scaling floor"). TableIO mode keeps the
-      // per-round snapshots (documented resume-from-round-k).
-      ConnectedComponents.runWithUniverse(edges, docs.select(col("conv_id")),
-        checkpointFn,
-        localMaxEdges =
-          if (io.isEmpty) ConnectedComponents.defaultLocalMaxEdges else 0L,
+        (df, _) => df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER),
+        localMaxEdges = ConnectedComponents.defaultLocalMaxEdges,
         // pair-dedup upstream guarantees distinct pairs → the finisher
         // path skips CC's own distinct() shuffle entirely
         edgesDistinct = true,

@@ -1,206 +1,36 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.pipeline.{Blocking, Pipeline, Scoring}
 
-/** Streaming incremental record linkage: the batch pipeline's blocking
-  * semantics (hybrid MinHash-LSH + winnowed exact shingles,
-  * [[graft.pipeline.Blocking]]) recast over an unbounded transcript
-  * stream. New conversations are linked against previously-seen ones the
-  * moment they arrive, instead of waiting for the next batch recompute —
-  * the continuous-ingest complement to `Pipeline.run` at 10^12-turn scale
+/** Streaming record linkage against a corpus snapshot: new conversations
+  * are linked the moment they arrive, instead of waiting for the next
+  * batch recompute — the continuous-ingest complement to `Pipeline.run`
   * (reference analog: the per-query online linking loop of
   * nordlys/erd/app/erd_app.py:60-118, which links one incoming query
-  * against a fixed dictionary; here the "dictionary" is the stream's own
-  * past, held as bounded per-block state).
+  * against a fixed dictionary; here the "dictionary" is the corpus
+  * snapshot, indexed by the batch pipeline's block keys).
   *
-  * Scale design:
-  *   - Per-block state is BOUNDED: at most `maxBlockSize` member ids.
-  *     A key that exceeds the cap collapses its state to a single
-  *     oversize flag (O(1) for hot keys — stopword shingles / dense LSH
-  *     bands stay cheap forever after they trip the cap).
-  *   - State ages out by EVENT TIME: a block idle past `idleGap` (by
-  *     watermark) is dropped, so total state is bounded by the active
-  *     window's key count, not the stream's history.
-  *   - Pair dedup is watermark-bounded (`dropDuplicatesWithinWatermark`).
-  *
-  * Semantics vs batch ([[Blocking.pairsFromBlocks]]): identical pair SET
-  * for any block whose final size stays ≤ cap (verified in
-  * `IncrementalLinkSpec`). Divergence on oversize blocks is inherent to
-  * append-mode streaming: batch drops the whole block retroactively,
-  * while the stream cannot retract pairs emitted before the cap tripped —
-  * the first `maxBlockSize` members' pairs stand, later members are
-  * dropped. Both directions are recall-safe for downstream exact verify
-  * (extra candidates are scored and filtered, as in the batch scorer).
+  * Same recipe as the batch pipeline: block keys from
+  * [[Blocking.hybridBlocks]] and scores from [[Scoring.mixture]], both
+  * under one [[Pipeline.Config]]. The path is STATELESS except the
+  * watermarked candidate dedup — blocking is a stream-static equi-join on
+  * block_key, and scoring runs the batch kernels inline on the joined
+  * row. The index is built once per snapshot (bucket it by block_key in
+  * production so the per-batch join probes co-located buckets); the
+  * stream pays one narrow join per micro-batch.
   */
 object IncrementalLink {
-
-  /** One doc's membership in one block. */
-  case class BlockedDoc(block_key: Long, conv_id: String, ts: java.sql.Timestamp)
-
-  /** A candidate pair emitted by a shared block; `ts` is the later
-    * member's event time (drives the downstream dedup watermark).
-    */
-  case class PairHit(conv_a: String, conv_b: String, block_key: Long,
-                     ts: java.sql.Timestamp)
-
-  /** Per-block state: sorted member ids, collapsed when oversize. */
-  case class BlockState(members: List[String], oversize: Boolean)
-
-  /** Stateless block-key derivation — BATCH-IDENTICAL keys: the same
-    * [[Blocking.hybridBlocks]] recipe, over the same pre-hashed tokens,
-    * with the same [[Pipeline.Config]] parameters as
-    * [[Pipeline.blocksPayload]]. A key computed here JOINS a batch
-    * `blocks` snapshot built under the same `cfg` for the same document
-    * text (the batch snapshot's member ids are `hid = xxhash64(conv_id)`,
-    * not the id string — map ids accordingly when mixing);
-    * `IncrementalLinkSpec` pins key-set equality against `blocksPayload`.
-    * Input: streaming or batch DataFrame with (conv_id, ts) and either
-    * `tokens: array<string>` or `text: string`.
-    */
-  def blockKeys(docs: DataFrame, cfg: Pipeline.Config = Pipeline.Config()): DataFrame = {
-    requireHybrid(cfg)
-    Blocking.hybridBlocks(docs, cfg.shingleK, cfg.lshShingleK, cfg.numHashes,
-      cfg.bands, cfg.winnowWindow, tokens = toks(docs),
-      keep = Seq(col("conv_id"), col("ts").cast("timestamp").as("ts")))
-  }
-
-  /** The streaming linker blocks with hybrid keys only; any other
-    * `cfg.blocking` would silently stop its keys from joining the batch
-    * snapshot's.
-    */
-  private def requireHybrid(cfg: Pipeline.Config): Unit =
-    require(cfg.blocking == Pipeline.HybridBlocking,
-      s"streaming linkage uses hybrid blocking, got ${cfg.blocking}")
 
   private def toks(docs: DataFrame): Column =
     if (docs.columns.contains("tokens")) col("tokens")
     else graft.functions.tokens(col("text"))
 
-  /** Stateful incremental pair emission. Each arriving member pairs with
-    * every member already in its block's state (canonical a < b), then
-    * joins the state; a member that would push the block past
-    * `maxBlockSize` trips the oversize collapse instead. Within a
-    * micro-batch, members are processed in (ts, conv_id) order so output
-    * is deterministic for a given batch decomposition.
-    *
-    * `watermark` bounds event-time lateness; a block idle for `idleGap`
-    * beyond the watermark drops its state (idleGap ≤ 0 → state never
-    * expires; only sensible for tests and bounded backfills).
-    */
-  def incrementalPairs(blocked: DataFrame, maxBlockSize: Int,
-                       watermark: String = "1 hour",
-                       idleGapMs: Long = 3600000L): Dataset[PairHit] = {
-    val spark = blocked.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (idleGapMs > 0) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    blocked
-      .withWatermark("ts", watermark)
-      .as[BlockedDoc]
-      .groupByKey(_.block_key)
-      .flatMapGroupsWithState[BlockState, PairHit](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, state: GroupState[BlockState]) if state.hasTimedOut =>
-          state.remove()
-          Iterator.empty
-        case (key, rows, state: GroupState[BlockState]) =>
-          var s = state.getOption.getOrElse(BlockState(Nil, oversize = false))
-          val out = List.newBuilder[PairHit]
-          var maxTs = 0L
-          // Deterministic intra-batch order (rows processed by (ts,
-          // conv_id)) WITHOUT buffering the micro-batch: sorting the whole
-          // group would hold a hot key's first large micro-batch on one
-          // task (ADVICE r4). Only the first `cap + 1 − |members|`
-          // distinct unseen ids — ordered by their earliest (ts, conv_id)
-          // record, which is where the sorted fold would add them — can
-          // change state or output (that many adds either fill the block
-          // or trip the collapse), so a bounded best-k selection over the
-          // streamed iterator is output-identical to the full sort and
-          // holds at most cap+1 records on any input size.
-          if (s.oversize) {
-            rows.foreach(r => maxTs = math.max(maxTs, r.ts.getTime))
-          } else {
-            val known = s.members.toSet
-            val slots = maxBlockSize + 1 - s.members.size
-            val sel = scala.collection.mutable.TreeSet.empty[(Long, String)]
-            val selTs = scala.collection.mutable.HashMap.empty[String, Long]
-            rows.foreach { r =>
-              val t = r.ts.getTime
-              maxTs = math.max(maxTs, t)
-              if (!known(r.conv_id)) selTs.get(r.conv_id) match {
-                case Some(prev) =>
-                  if (t < prev) { // keep each id's earliest record
-                    sel.remove((prev, r.conv_id))
-                    sel.add((t, r.conv_id)); selTs(r.conv_id) = t
-                  }
-                case None =>
-                  if (sel.size < slots) {
-                    sel.add((t, r.conv_id)); selTs(r.conv_id) = t
-                  } else if (Ordering[(Long, String)].lt((t, r.conv_id), sel.last)) {
-                    val evicted = sel.last
-                    sel.remove(evicted); selTs.remove(evicted._2)
-                    sel.add((t, r.conv_id)); selTs(r.conv_id) = t
-                  }
-              }
-            }
-            sel.foreach { case (t, id) =>
-              if (!s.oversize) {
-                if (s.members.sizeIs >= maxBlockSize) {
-                  // collapse: hot-key state becomes O(1), like the batch
-                  // path's cap+1-bounded collect (Blocking.pairsFromBlocks)
-                  s = BlockState(Nil, oversize = true)
-                } else {
-                  val ts = new java.sql.Timestamp(t)
-                  s.members.foreach { m =>
-                    val (a, b) = if (m < id) (m, id) else (id, m)
-                    out += PairHit(a, b, key, ts)
-                  }
-                  s = s.copy(members = id :: s.members)
-                }
-              }
-            }
-          }
-          state.update(s)
-          if (idleGapMs > 0)
-            // must exceed the current watermark or Spark rejects the
-            // timestamp; the max() keeps late-data batches legal
-            state.setTimeoutTimestamp(
-              math.max(maxTs + idleGapMs, state.getCurrentWatermarkMs() + 1))
-          out.result().iterator
-      }
-  }
-
-  /** Cross-block pair dedup, watermark-bounded (the streaming analog of
-    * the batch path's groupBy(conv_a, conv_b) dedup shuffle): a pair
-    * re-emitted by another shared block inside the watermark window is
-    * dropped; state for old pairs ages out with the watermark.
-    */
-  def dedupedPairs(pairs: Dataset[PairHit],
-                   watermark: String = "1 hour"): Dataset[PairHit] =
-    pairs
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("conv_a", "conv_b")
-
-  // --------------------------------------------------------------------
-  // Stream-static linkage: link incoming docs against a STATIC corpus
-  // snapshot (yesterday's lake) instead of the stream's own past. The
-  // whole path is STATELESS except the watermarked candidate dedup —
-  // blocking is a stream-static equi-join on block_key (no state), and
-  // scoring runs the batch kernels inline on the joined row. This is the
-  // deployment shape for "dedup the day's ingest against the 100-TB
-  // corpus": the index is built once per snapshot (bucket it by
-  // block_key in production so the per-batch join probes co-located
-  // buckets), the stream pays one narrow join per micro-batch.
-  // --------------------------------------------------------------------
-
   /** Per-doc linkage features: the scoring payload of
     * [[graft.pipeline.Scoring.scorePairs]] (distinct 64-bit token hashes +
     * a bounded normalized prefix) plus one row per hybrid block key
-    * ([[Blocking.hybridBlocks]], as in [[blockKeys]]).
+    * ([[Blocking.hybridBlocks]], the keys of [[Pipeline.blocksPayload]]).
     * Package-visible so [[graft.Verify]] can export the exact stream-side
     * feature rows (tok_set, prefix, block_key) the q53 oracle replays.
     */
@@ -221,11 +51,9 @@ object IncrementalLink {
       tokens = t, keep = base.columns.filterNot(Set("text", "tokens")).map(col).toSeq)
   }
 
-  private def docFeatures(docs: DataFrame, cfg: Pipeline.Config): DataFrame = {
-    requireHybrid(cfg)
+  private def docFeatures(docs: DataFrame, cfg: Pipeline.Config): DataFrame =
     docFeatures(docs, cfg.shingleK, cfg.lshShingleK, cfg.numHashes, cfg.bands,
       cfg.winnowWindow, cfg.prefixChars)
-  }
 
   /** Build the static side of the stream-static join from a corpus
     * snapshot (conv_id + text|tokens): (block_key, corpus_id,

@@ -52,10 +52,4 @@ class BlockingMetricsSpec extends SparkSpec {
     assert(out.getLong(5) == 0L && out.getLong(6) == 0L)
     assert(out.getDouble(7) == 0.0)
   }
-
-  test("block size histogram") {
-    val h = BlockingMetrics.blockSizeHistogram(fixtureBlocks)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(h == Map(3L -> 1L, 2L -> 1L, 1L -> 1L))
-  }
 }

@@ -71,14 +71,15 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("word_shingles: k-grams, short docs fall back to whole doc") {
-    val out = Seq("a b c d", "a b").toDF("t")
+    val out = Seq("a b c d", "a b", "?! ...").toDF("t")
       .select(word_shingles(tokens($"t"), 3)).as[Seq[String]].collect()
     assert(out(0) == Seq("a b c", "b c d"))
     assert(out(1) == Seq("a b"))
+    assert(out(2).isEmpty) // zero tokens: no shingle, not [""]
   }
 
   test("native word_shingles matches the HOF reference implementation") {
-    val df = Seq("a b c d e f g", "a b", "x", "", "one two three").toDF("t")
+    val df = Seq("a b c d e f g", "a b", "x", "", "?! ...", "one two three").toDF("t")
     for (k <- Seq(1, 2, 3, 5)) {
       val native = df.select(word_shingles(tokens($"t"), k)).as[Seq[String]].collect()
       val hof = df.select(word_shingles_hof(tokens($"t"), k)).as[Seq[String]].collect()
@@ -91,12 +92,11 @@ class FunctionsSpec extends SparkSpec {
     val hashed = df.select(shingle_hashes(tokens($"t"), 2)).as[Seq[Long]].collect()
     val strings = df.select(array_distinct(word_shingles(tokens($"t"), 2)))
       .as[Seq[String]].collect()
-    // same distinct-set sizes (hashing is injective w.h.p. on tiny sets) —
-    // except zero-token docs: string shingles keep the ''-whole-doc
-    // fallback, hash shingles emit the empty set (empty docs must not
-    // share a block key or score jaccard 1.0 against each other)
+    // same distinct-set sizes (hashing is injective w.h.p. on tiny sets);
+    // zero-token docs give the empty set on both sides (empty docs must
+    // not share a block key or score jaccard 1.0 against each other)
     hashed.zip(strings).foreach { case (h, s) =>
-      if (s == Seq("")) assert(h.isEmpty) else assert(h.size == s.size)
+      assert(h.size == s.size)
       assert(h.distinct.size == h.size)
     }
     // different seeds → disjoint hash families

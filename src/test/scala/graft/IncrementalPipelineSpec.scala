@@ -197,8 +197,7 @@ class IncrementalPipelineSpec extends SparkSpec {
   test("combined-size cap drops are reported and bounded, never silent") {
     // shingleK=1 + tiny cap: stopword token blocks blow past the cap only
     // once both batches are counted together
-    val tiny = Pipeline.Config(blocking = Pipeline.ExactBlocking,
-      shingleK = 1, maxBlockSize = 8)
+    val tiny = Pipeline.Config(shingleK = 1, maxBlockSize = 8)
     val priorRun = Pipeline.run(prior, tiny)
     val inc = IncrementalPipeline.run(delta,
       Pipeline.docsPayload(prior, tiny), priorRun.clusters, tiny)
